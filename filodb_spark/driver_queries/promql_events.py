@@ -18,9 +18,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from filodb_spark.kernels.aggregations import aggregate, count_values, topk
-from filodb_spark.kernels.grid import grid_from_bounds
+from filodb_spark.kernels.grid import grid_from_bounds, with_prev_sample
 from filodb_spark.kernels.instant_fns import instant_fn_expr
 from filodb_spark.kernels.range_fns import range_function
+from filodb_spark.memo import Memo
 from filodb_spark.tsdf import events_ts
 
 STEP = 6 * 3600 * 1000          # 6h evaluation step
@@ -32,19 +33,23 @@ DAY = 24 * 3600 * 1000
 # ---------------------------------------------------------------------------
 
 
-_BOUNDS_CACHE: dict = {}
-_EV_CACHE: dict = {}
+def _unpersist(frame) -> None:
+    try:                           # release executor cache memory
+        frame.unpersist()
+    except Exception:
+        pass                       # a dead session's frame
+
+
+_BOUNDS_CACHE = Memo(32)
+_EV_CACHE = Memo(32, on_evict=_unpersist)
 
 
 def _bounds(spark: SparkSession, sf_dir: str) -> tuple[int, int]:
     """min/max events ts per fixture dir, memoized per process: every
     query needs the grid bounds and the 2-row aggregate is pure."""
-    if sf_dir not in _BOUNDS_CACHE:
-        ev = events_ts(spark, sf_dir, dedupe=False)
-        if len(_BOUNDS_CACHE) >= 32:   # FIFO-bounded like every memo
-            _BOUNDS_CACHE.pop(next(iter(_BOUNDS_CACHE)))
-        _BOUNDS_CACHE[sf_dir] = tuple(ev.agg(F.min("ts"), F.max("ts")).first())
-    return _BOUNDS_CACHE[sf_dir]
+    return _BOUNDS_CACHE.get(sf_dir, lambda: tuple(
+        events_ts(spark, sf_dir, dedupe=False)
+        .agg(F.min("ts"), F.max("ts")).first()))
 
 
 def _events_cached(spark: SparkSession, sf_dir: str,
@@ -64,15 +69,7 @@ def _events_cached(spark: SparkSession, sf_dir: str,
     attach skipped on dirty data). Consumers that reshape the frame
     (union markers, re-aggregation) must not pass ``prev_attached``
     downstream."""
-    from filodb_spark.kernels.grid import with_prev_sample
-    key = (id(spark), sf_dir, series_cols)
-    if key not in _EV_CACHE:
-        if len(_EV_CACHE) >= 32:       # FIFO-bounded; evicted entries
-            old = _EV_CACHE.pop(next(iter(_EV_CACHE)))
-            try:                       # release executor cache memory
-                old.unpersist()
-            except Exception:
-                pass                   # a dead session's frame
+    def build():
         ev = events_ts(spark, sf_dir, series_cols=series_cols)
         if series_cols == ("event_type",):
             # guard the prev_attached precondition at the producer: the
@@ -93,8 +90,8 @@ def _events_cached(spark: SparkSession, sf_dir: str,
                             dedupe=False)
             if raw.where(F.isnan(v) | v.isNull()).isEmpty():
                 ev = with_prev_sample(ev, series_cols)
-        _EV_CACHE[key] = ev.cache()
-    return _EV_CACHE[key]
+        return ev.cache()
+    return _EV_CACHE.get((id(spark), sf_dir, series_cols), build)
 
 
 def _series(spark: SparkSession, sf_dir: str, series_cols=("event_type",)):

@@ -243,6 +243,8 @@ def make_handler(engine, write_buffer=None, bearer_token=None,
             try:
                 path = url.path.rstrip("/")
                 timeout_s = _parse_timeout(q)
+                want_stats = q.get("stats", "") in ("true", "1")
+                hist_map = q.get("histogramMap", "") in ("true", "1")
                 if "/api/v1/cluster/" in path and \
                         path.endswith("/status"):
                     # ClusterApiRoute.scala:24-36 shard health report.
@@ -284,45 +286,35 @@ def make_handler(engine, write_buffer=None, bearer_token=None,
                     # &explainOnly=true plans without executing
                     # (PrometheusApiRoute.scala:52-58); &stats=true
                     # appends queryStats/queryWarnings
+                    start, end = float(q["start"]), float(q["end"])
+                    step = float(q.get("step", "60"))
                     if q.get("explainOnly", "") in ("true", "1"):
-                        resp = render.explain_range_api(
-                            engine, q["query"], float(q["start"]),
-                            float(q["end"]), float(q.get("step", "60")))
-                        return self._send(resp)
-                    want_stats = q.get("stats", "") in ("true", "1")
-                    if warn_limits is not None:
-                        # plan-time enforced limit: reject before the
-                        # full job runs (413, ExecPlan.scala:214-226)
+                        return self._send(render.explain_range_api(
+                            engine, q["query"], start, end, step))
+
+                    def work():
+                        # plan-time enforced limit, in the request's job
+                        # group and deadline: reject before the full job
+                        # runs (413, ExecPlan.scala:214-226)
                         engine.enforce_plan_limits(
-                            q["query"], int(float(q["start"]) * 1000),
-                            int(float(q["end"]) * 1000),
-                            int(float(q.get("step", "60")) * 1000),
-                            warn_limits)
-                    resp = run_with_timeout(
-                        engine.spark,
-                        lambda: render.query_range_api(
-                            engine, q["query"], float(q["start"]),
-                            float(q["end"]), float(q.get("step", "60")),
+                            q["query"], int(start * 1000), int(end * 1000),
+                            int(step * 1000), warn_limits)
+                        return render.query_range_api(
+                            engine, q["query"], start, end, step,
                             stats=want_stats, limits=warn_limits,
-                            histogram_map=q.get("histogramMap", "")
-                            in ("true", "1")),
-                        timeout_s)
+                            histogram_map=hist_map)
+                    resp = run_with_timeout(engine.spark, work, timeout_s)
                 elif path.endswith("/api/v1/query"):
-                    want_stats = q.get("stats", "") in ("true", "1")
-                    if warn_limits is not None:
-                        t_ms = int(float(q["time"]) * 1000)
-                        engine.enforce_plan_limits(q["query"], t_ms, t_ms,
-                                                   60_000, warn_limits)
-                    resp = run_with_timeout(
-                        engine.spark,
-                        lambda: render.query_api(engine, q["query"],
-                                                 float(q["time"]),
-                                                 stats=want_stats,
-                                                 limits=warn_limits,
-                                                 histogram_map=q.get(
-                                                     "histogramMap", "")
-                                                 in ("true", "1")),
-                        timeout_s)
+                    t = float(q["time"])
+
+                    def work():
+                        engine.enforce_plan_limits(
+                            q["query"], int(t * 1000), int(t * 1000),
+                            60_000, warn_limits)
+                        return render.query_api(
+                            engine, q["query"], t, stats=want_stats,
+                            limits=warn_limits, histogram_map=hist_map)
+                    resp = run_with_timeout(engine.spark, work, timeout_s)
                 elif path.endswith("/api/v1/labels"):
                     # start/end (epoch sec) bound the series span like the
                     # reference route (PrometheusApiRoute.scala:85-98);

@@ -52,6 +52,8 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from filodb_spark.memo import Memo
+
 MS_PER_SEC = 1000
 STALE_SAMPLE_AFTER_MS = 5 * 60 * 1000  # filodb-defaults.conf: stale-sample-after = 5 minutes
 
@@ -100,8 +102,8 @@ def step_bounds(grid: StepGrid, window: int, ts: Column) -> tuple[Column, Column
     return k_min, k_max
 
 
-_EXPLODE_MEMO: dict = {}
-_PREV_MEMO: dict = {}
+_EXPLODE_MEMO = Memo(64)
+_PREV_MEMO = Memo(64)
 
 
 def explode_to_steps(df: DataFrame, grid: StepGrid, window: int,
@@ -113,15 +115,12 @@ def explode_to_steps(df: DataFrame, grid: StepGrid, window: int,
     step are dropped map-side (before any shuffle).
 
     The three derived columns are unresolved expressions depending only
-    on (grid, window, ts_col) — memoized per process (FIFO-bounded like
-    every memo): Column construction is driver-side py4j round-trips,
-    ~2 ms each on a loaded driver, and every windowed query pays this
-    builder (r13 driver-cost dissection).
+    on (grid, window, ts_col) — memoized per process: Column
+    construction is driver-side py4j round-trips, ~2 ms each on a loaded
+    driver, and every windowed query pays this builder (r13 driver-cost
+    dissection).
     """
-    key = (grid, window, ts_col)
-    if key not in _EXPLODE_MEMO:
-        if len(_EXPLODE_MEMO) >= 64:
-            _EXPLODE_MEMO.pop(next(iter(_EXPLODE_MEMO)))
+    def build():
         k_min, k_max = step_bounds(grid, window, F.col(ts_col))
         # explode the window-end instants t = start + k*step DIRECTLY
         # (same long arithmetic as deriving k first): one Generate over
@@ -130,11 +129,11 @@ def explode_to_steps(df: DataFrame, grid: StepGrid, window: int,
         # same rows the old `k_min <= k_max` filter removed.
         lo = (F.lit(grid.start) + k_min * F.lit(grid.step)).cast("long")
         hi = (F.lit(grid.start) + k_max * F.lit(grid.step)).cast("long")
-        _EXPLODE_MEMO[key] = F.explode(
+        return F.explode(
             F.when(k_min <= k_max,
                    F.sequence(lo, hi, F.lit(grid.step).cast("long")))
         ).alias("t")
-    return df.select("*", _EXPLODE_MEMO[key])
+    return df.select("*", _EXPLODE_MEMO.get((grid, window, ts_col), build))
 
 
 def with_prev_sample(df: DataFrame, series_cols: Sequence[str],
@@ -152,21 +151,18 @@ def with_prev_sample(df: DataFrame, series_cols: Sequence[str],
     same way may precompute these columns once (e.g. at cache build) and
     pass ``prev_attached=True`` to :func:`range_fns.range_function`.
     """
-    key = (tuple(series_cols), ts_col, value_col)
-    if key not in _PREV_MEMO:
-        if len(_PREV_MEMO) >= 64:
-            _PREV_MEMO.pop(next(iter(_PREV_MEMO)))
+    def build():
         w = Window.partitionBy(*[F.col(c) for c in series_cols]) \
             .orderBy(F.col(ts_col))
         # sentinel-coalesced so downstream min_by/max_by never see NULLs
         # (their null-skipping rules differ across engines; a sentinel
         # keeps `prev_ts >= t - window` uniformly false instead)
-        _PREV_MEMO[key] = (
-            F.coalesce(F.lag(ts_col).over(w), F.lit(-(1 << 62)))
-            .alias("prev_ts"),
-            F.coalesce(F.lag(value_col).over(w), F.lit(0.0))
-            .alias("prev_value"))
-    prev_ts, prev_value = _PREV_MEMO[key]
+        return (F.coalesce(F.lag(ts_col).over(w), F.lit(-(1 << 62)))
+                .alias("prev_ts"),
+                F.coalesce(F.lag(value_col).over(w), F.lit(0.0))
+                .alias("prev_value"))
+    prev_ts, prev_value = _PREV_MEMO.get(
+        (tuple(series_cols), ts_col, value_col), build)
     return df.select("*", prev_ts, prev_value)
 
 

@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 
 from filodb_spark.kernels.grid import (StepGrid, drop_nan, explode_to_steps,
                                        step_bounds, with_prev_sample)
+from filodb_spark.memo import Memo
 
 def NAN() -> Column:
     return F.lit(float("nan"))
@@ -115,26 +116,16 @@ def _simple(agg: Column):
     return [agg.alias("_v")], _nan_if_null(F.col("_v"))
 
 
-_BUILD_MEMO: dict = {}
-
-
-def _memoized(memo: dict, key, builder):
-    """FIFO-bounded memo for unresolved-expression builders: the
-    aggregate/projection Columns depend only on (fn, window, params), and
-    building them is driver-side py4j traffic (~2 ms per Column op on a
-    loaded driver — the rate family's ~80-op expressions cost ~0.2 s per
-    query, r13 driver-cost dissection). Unresolved expressions are
-    plan-independent, so reuse across queries is safe."""
-    if key not in memo:
-        if len(memo) >= 64:
-            memo.pop(next(iter(memo)))
-        memo[key] = builder()
-    return memo[key]
+# Unresolved aggregate/projection Columns depend only on (fn, window,
+# params) and are plan-independent, so queries share them: each Column op
+# is ~2 ms of driver py4j traffic, ~0.2 s per query for the rate family's
+# ~80-op expressions (r13 driver-cost dissection).
+_BUILD_MEMO = Memo(64)
 
 
 def _build(fn: str, window: int, params: tuple):
-    return _memoized(_BUILD_MEMO, (fn, window, params),
-                     lambda: _build_uncached(fn, window, params))
+    return _BUILD_MEMO.get((fn, window, params),
+                           lambda: _build_uncached(fn, window, params))
 
 
 def _build_uncached(fn: str, window: int, params: tuple):
@@ -320,12 +311,12 @@ TILEABLE = frozenset(
 _TILED_NEEDS_PAIR = {"changes", "resets", "idelta", "irate", "rate", "increase"}
 
 
-_BUILD_TILED_MEMO: dict = {}
+_BUILD_TILED_MEMO = Memo(64)
 
 
 def _build_tiled(fn: str, window: int, params: tuple):
-    return _memoized(_BUILD_TILED_MEMO, (fn, window, params),
-                     lambda: _build_tiled_uncached(fn, window, params))
+    return _BUILD_TILED_MEMO.get(
+        (fn, window, params), lambda: _build_tiled_uncached(fn, window, params))
 
 
 def _build_tiled_uncached(fn: str, window: int, params: tuple):

@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import threading
 from dataclasses import dataclass
+from functools import cached_property
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -29,6 +30,7 @@ from filodb_spark.kernels import binary as bin_k
 from filodb_spark.kernels.grid import STALE_SAMPLE_AFTER_MS, StepGrid
 from filodb_spark.kernels.instant_fns import INSTANT_FUNCTIONS, instant_fn_expr
 from filodb_spark.kernels.range_fns import range_function
+from filodb_spark.memo import Memo
 from filodb_spark.promql import ast as A
 from filodb_spark.promql.parser import parse
 
@@ -432,6 +434,12 @@ class TsStore:
         return self.hist_df.select("labels", "ts", "sum", "count",
                                    "hist", *extra)
 
+    # Probe memos: lazy and per instance, so a dataclasses.replace copy
+    # starts empty and a store that never probes never creates one.
+    _multischema_memo = cached_property(lambda self: Memo(256))
+    _ds_schema_memo = cached_property(lambda self: Memo(256))
+    _index_cover_memo = cached_property(lambda self: Memo(256))
+
     def _select_multischema(self, matchers, type_value: str | None,
                             ts_lo: int | None = None,
                             ts_hi: int | None = None) -> DataFrame:
@@ -478,22 +486,15 @@ class TsStore:
                                    else ~name.isin(delta))
             return gauge.where(F.lit(False))
         hist = _apply_label_matchers(self._hist_full(), matchers)
-        memo = self.__dict__.setdefault("_multischema_memo", {})
-        key = (tuple((m.name, m.op, m.value) for m in matchers),
-               ts_lo, ts_hi)
-        if key in memo:
-            gauge_hit, hist_hit = memo[key]
-        else:
-            def scoped(df):
-                if ts_lo is None:
-                    return df
-                return df.where((F.col("ts") >= ts_lo)
-                                & (F.col("ts") <= ts_hi))
-            gauge_hit = not scoped(gauge).isEmpty()
-            hist_hit = not scoped(hist).isEmpty()
-            if len(memo) >= 256:
-                memo.pop(next(iter(memo)))
-            memo[key] = (gauge_hit, hist_hit)
+
+        def scoped(df):
+            if ts_lo is None:
+                return df
+            return df.where((F.col("ts") >= ts_lo) & (F.col("ts") <= ts_hi))
+        gauge_hit, hist_hit = self._multischema_memo.get(
+            (tuple((m.name, m.op, m.value) for m in matchers), ts_lo, ts_hi),
+            lambda: (not scoped(gauge).isEmpty(),
+                     not scoped(hist).isEmpty()))
         if gauge_hit and hist_hit:
             raise SchemaMismatch(
                 "Multiple schemas found, please filter. Expected schema "
@@ -567,9 +568,8 @@ class TsStore:
         if (stamped_g is not None or self.ds_df is None) and \
                 (stamped_c is not None or self.ds_counter_df is None):
             return None      # absent from every mounted table's stamp
-        cache = self.__dict__.setdefault("_ds_schema_memo", {})
-        if metric not in cache:
-            schema = None
+
+        def probe():
             # existence probes filter the labels MAP column, which has
             # no parquet row-group stats — an ABSENT metric costs a
             # full scan of each DS table's labels column (present ones
@@ -578,9 +578,6 @@ class TsStore:
             # bounded probe on the physically-sorted _metric column
             if self.partkey_df is not None and self.partkey_covers_ds \
                     and not self._index_covers(metric):
-                if len(cache) >= 256:
-                    cache.pop(next(iter(cache)))
-                cache[metric] = None
                 return None
             # a stamped table never needs its probe (the stamp already
             # said the metric is absent from it); only unstamped
@@ -588,33 +585,27 @@ class TsStore:
             if self.ds_df is not None and stamped_g is None and \
                     not self.ds_df.where(
                         F.col("labels")[METRIC] == metric).isEmpty():
-                schema = "gauge"
-            elif self.ds_counter_df is not None and stamped_c is None \
+                return "gauge"
+            if self.ds_counter_df is not None and stamped_c is None \
                     and not self.ds_counter_df.where(
                         F.col("labels")[METRIC] == metric).isEmpty():
-                schema = "counter"
-            # FIFO-bounded like _multischema_memo: per-process state
-            # stays capped no matter how many distinct metrics a
-            # long-lived session resolves
-            if len(cache) >= 256:
-                cache.pop(next(iter(cache)))
-            cache[metric] = schema
-        return cache[metric]
+                return "counter"
+            return None
+        return self._ds_schema_memo.get(metric, probe)
 
     def _index_covers(self, metric: str) -> bool:
         """Does the attached part-key index hold rows for `metric`?
-        One bounded existence probe per metric, memoized for the
-        store's lifetime (a series table rewrite warrants a fresh
-        mount, which resets the memo)."""
-        cache = self.__dict__.setdefault("_index_cover_memo", {})
-        if metric not in cache:
+        One bounded existence probe per metric, memoized per store (a
+        series table rewrite warrants a fresh mount, which resets the
+        memo)."""
+        def probe():
             df = self.partkey_df.where(F.col("labels")[METRIC] == metric)
             if "_metric" in self.partkey_df.columns:
                 # pushable twin: row-group min/max skipping on the
                 # sorted physical column
                 df = df.where(F.col("_metric") == metric)
-            cache[metric] = not df.isEmpty()
-        return cache[metric]
+            return not df.isEmpty()
+        return self._index_cover_memo.get(metric, probe)
 
     def select_partkeys(self, sel: A.VectorSelector) -> DataFrame | None:
         """Matcher-filtered part-key rows (one per series), or None when
@@ -783,16 +774,15 @@ class PromQLEngine:
         # a query compiling on another thread (ADVICE r6 class)
         self._preagg_tls = threading.local()
         # memoized plan-time scrape-interval estimates per selector
-        # (_estimate_scrape_ms) — insertion-ordered dict as bounded FIFO
-        self._scrape_cache: dict = {}
+        # (_estimate_scrape_ms)
+        self._scrape_cache = Memo(256)
         # selector-fragment memo (r14): the leaf scan + _sk key column
         # for a (selector, pruned range) is a pure function of the store,
         # and every Dataset op building it is an eager full-plan analysis
         # pass on the driver. Holds LOGICAL PLANS (DataFrames), never
         # results; bypassed whenever a stats collector is attached (the
-        # observe_scan node must be fresh per query). FIFO-bounded like
-        # every memo. Set to None to disable (A/B hook).
-        self._scan_memo: dict | None = {}
+        # observe_scan node must be fresh per query).
+        self._scan_memo = Memo(64)
         # per-query QueryStats hook (stats.QueryStatsCollector): when
         # set, every leaf scan is wrapped in a DataFrame.observe node
         # (QueryStats analog, QueryContext.scala:385-470). Thread-local:
@@ -839,23 +829,16 @@ class PromQLEngine:
         selectors are the common case in a serving session; the memo
         holds unexecuted logical plans keyed on the frozen selector and
         pruned range — never results. Bypassed when a stats collector
-        is attached (its CollectMetrics node must be fresh per query)
-        or when the memo is disabled (``_scan_memo = None``)."""
-        memo = None if self._stats is not None else self._scan_memo
-        key = (sel, ts_lo, ts_hi, what)
-        if memo is not None and key in memo:
-            return memo[key]
-        if what == "df":
-            out = self._scan(sel, ts_lo, ts_hi) \
-                .withColumn("_sk", bin_k.series_key(F.col("labels")))
-        else:
-            out = (self._scan_sk(sel, ts_lo, ts_hi)
-                   .select("_sk", "labels").dropDuplicates(["_sk"]))
-        if memo is not None:
-            if len(memo) >= 64:
-                memo.pop(next(iter(memo)))
-            memo[key] = out
-        return out
+        is attached (its CollectMetrics node must be fresh per query)."""
+        def build():
+            if what == "df":
+                return self._scan(sel, ts_lo, ts_hi) \
+                    .withColumn("_sk", bin_k.series_key(F.col("labels")))
+            return (self._scan_sk(sel, ts_lo, ts_hi)
+                    .select("_sk", "labels").dropDuplicates(["_sk"]))
+        if self._stats is not None:
+            return build()
+        return self._scan_memo.get((sel, ts_lo, ts_hi, what), build)
 
     # ---- public API (PrometheusApiRoute.scala:49,68 equivalents) -------
 
@@ -1244,26 +1227,23 @@ class PromQLEngine:
         same selectors must not pay the index aggregate on every query
         (scrape intervals are deployment constants; the cache lives as
         long as the engine — rebuild the engine after reattaching a
-        materially different index). Bounded FIFO, GIL-safe."""
+        materially different index)."""
         if self.store.partkey_df is None:
             return None
-        key = (sel.metric, tuple((m.name, m.op, m.value)
-                                 for m in sel.matchers))
-        cache = self._scrape_cache
-        if key in cache:
-            return cache[key]
-        pk = self.store.select_partkeys(sel)
-        est = None
-        if pk is not None:
+
+        def estimate():
+            pk = self.store.select_partkeys(sel)
+            if pk is None:
+                return None
             row = pk.where(F.col("samples") > 1).agg(
                 F.sum(F.col("last_ts") - F.col("first_ts")).alias("span"),
                 F.sum(F.col("samples") - 1).alias("gaps")).first()
             if row is not None and row["gaps"]:
-                est = row["span"] / row["gaps"]
-        if len(cache) >= 256:
-            cache.pop(next(iter(cache)))
-        cache[key] = est
-        return est
+                return row["span"] / row["gaps"]
+            return None
+        return self._scrape_cache.get(
+            (sel.metric, tuple((m.name, m.op, m.value) for m in sel.matchers)),
+            estimate)
 
     def _run_range_fn(self, sel: A.VectorSelector, grid: StepGrid,
                       window: int, fn: str, params: tuple) -> DataFrame:

@@ -2,10 +2,11 @@
 
 1. Scan memo (compiler._scan_sk, commit 2cd00ae) — claimed PLAN-NEUTRAL:
    the memo returns the same logical plan the un-memoized path builds.
-   Evidence: prom_raw / prom_sum_rate explained with the memo DISABLED
-   (*_memo_off = the r13 build path) and with the memo ENABLED AND HIT
-   (second build of the same selector; *_memo_on). The two files must
-   differ only in expression ids.
+   Evidence: prom_raw / prom_sum_rate explained on a fresh engine's
+   first build (*_memo_off: a cold memo misses, so the fragment is
+   built as on the r13 path) and on its second build of the same
+   selector (*_memo_on: the memo hits). The two files must differ only
+   in expression ids.
 2. Events-cache prev_attached guard (promql_events._events_cached,
    commits 6432d00 + 2cd00ae) — the NaN/null-freeness check moved from
    the DEDUPED frame (re-ran the dedupe HashAggregate + Exchange once
@@ -64,7 +65,6 @@ def main() -> None:
             rows.append((labels, t0_ms + i * 10_000, float(v)))
     df = spark.createDataFrame(
         rows, "labels map<string,string>, ts long, value double")
-    eng = PromQLEngine(spark, TsStore(df))
     end = t0_ms + 120 * 10_000
     start = end - 15 * 60_000
     queries = {
@@ -72,12 +72,10 @@ def main() -> None:
         "prom_sum_rate": 'sum(rate(heap_usage0{_ws_="demo"}[5m]))',
     }
     for name, q in queries.items():
-        eng._scan_memo = None                      # r13 path: no memo
-        _write(f"{name}_memo_off",
+        eng = PromQLEngine(spark, TsStore(df))     # fresh engine, cold memo
+        _write(f"{name}_memo_off",                 # first build: memo miss
                eng.query_range(q, start, end, 60_000))
-        eng._scan_memo = {}                        # r14 path, warm the memo
-        eng.query_range(q, start, end, 60_000)
-        _write(f"{name}_memo_on",                  # memo HIT build
+        _write(f"{name}_memo_on",                  # second build: memo hit
                eng.query_range(q, start, end, 60_000))
 
     # --- 2. cache-build guard: deduped-frame vs raw-frame check ----------

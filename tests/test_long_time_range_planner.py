@@ -47,6 +47,10 @@ def engine(spark):
     return PromQLEngine(spark, store)
 
 
+def _unbuilt():
+    raise AssertionError("expected a memo hit")
+
+
 def _run(engine, q, start_min, end_min, step_min=1):
     out = engine.query_range(q, T0 + start_min * MIN, T0 + end_min * MIN,
                              step_min * MIN).collect()
@@ -320,7 +324,7 @@ def test_ds_schema_of_resolves_by_probe_and_registry(spark, dual_engine):
     assert store.ds_schema_of("absent_metric") is None
     assert store.ds_schema_of(None) is None
     # probes are memoized per metric
-    assert "g" in store.__dict__["_ds_schema_memo"]
+    assert "g" in store._ds_schema_memo
     # the declared registry wins without any probe
     import dataclasses
     declared = dataclasses.replace(store, counter_metrics=("x",))
@@ -393,8 +397,8 @@ def test_ds_schema_probe_short_circuits_via_covering_index(spark,
     assert st.ds_schema_of("nope") is None
     # the index probe ran and was memoized; the DS-table probe memo
     # records the short-circuit
-    assert st.__dict__["_index_cover_memo"]["nope"] is False
-    assert st.__dict__["_ds_schema_memo"]["nope"] is None
+    assert st._index_cover_memo.get("nope", _unbuilt) is False
+    assert st._ds_schema_memo.get("nope", _unbuilt) is None
     assert st.ds_schema_of("c") == "counter"
     assert st.ds_schema_of("g") == "gauge"
 

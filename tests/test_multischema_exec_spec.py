@@ -212,6 +212,10 @@ def test_discovery_is_range_scoped(spark):
         engine.query_range('{dc="0"}', 0, 200_000, 10_000).collect()
 
 
+def _unbuilt():
+    raise AssertionError("expected a memo hit")
+
+
 def test_discovery_probes_are_memoized(spark):
     """ADVICE r9 / verdict item 4: a repeated metric-less selector must
     not pay the two eager sample-table probes per query — the
@@ -229,8 +233,10 @@ def test_discovery_probes_are_memoized(spark):
     store = TsStore(gauge, hist_df=hist, hist_metrics=("h",))
     engine = PromQLEngine(spark, store)
     engine.query_range('{dc="0"}', 10_000, 10_000, 10_000).collect()
-    assert len(store._multischema_memo) == 1
-    (key, hits), = store._multischema_memo.items()
+    memo = store._multischema_memo
+    assert len(memo) == 1
+    (key,) = memo
+    hits = memo.get(key, _unbuilt)
     engine.query_range('{dc="0"}', 10_000, 10_000, 10_000).collect()
     # same selector+range -> same single memo entry, no second probe
-    assert store._multischema_memo == {key: hits}
+    assert list(memo) == [key] and memo.get(key, _unbuilt) == hits

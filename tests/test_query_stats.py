@@ -284,6 +284,38 @@ class TestPlanTimeLimits:
         finally:
             srv.shutdown()
 
+    def test_estimate_runs_in_request_job_group(self, eng, monkeypatch):
+        # the estimate's Spark jobs belong to the request: its job group
+        # (cancelled on timeout) and its deadline, on both query routes
+        # and on both the inline and the timeout-thread paths
+        from filodb_spark.http_server import serve
+        e, lo, hi, _ = eng
+        groups = []
+        real = type(e).enforce_plan_limits
+
+        def spy(self, *args, **kwargs):
+            groups.append(self.spark.sparkContext.getLocalProperty(
+                "spark.jobGroup.id"))
+            return real(self, *args, **kwargs)
+        monkeypatch.setattr(type(e), "enforce_plan_limits", spy)
+        srv = serve(e, warn_limits=PerQueryLimits(
+            enforce_time_series_scanned=10 ** 6))
+        try:
+            host, port = srv.server_address
+            base = f"http://{host}:{port}/promql/ds/api/v1"
+            q = "sum(rate(purchase[24h]))"
+            urls = [f"{base}/query_range?query={q}&start={lo / 1000}"
+                    f"&end={hi / 1000}&step=21600",
+                    f"{base}/query?query={q}&time={hi / 1000}"]
+            for url in urls + [u + "&timeout=120s" for u in urls]:
+                body = json.loads(urllib.request.urlopen(url).read())
+                assert body["status"] == "success"
+        finally:
+            srv.shutdown()
+        assert len(groups) == 4
+        assert all(g and g.startswith("query-") for g in groups), groups
+        assert len(set(groups)) == 4      # one group per request
+
     def test_engine_level_enforce(self, eng):
         from filodb_spark.promql.compiler import QueryLimitException
         e, lo, hi, _ = eng

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from filodb_spark.kernels.grid import StepGrid
 from filodb_spark.kernels.range_fns import range_function
+from filodb_spark.memo import Memo
 
 # goldens from RateFunctionsSpec.scala:16-25
 COUNTER_SAMPLES = [
@@ -274,7 +275,7 @@ class TestPrevAttachedAndExprReuse:
     """r13 optimization pins: (a) pre-attached prev columns are
     row-identical to the kernel's own with_prev_sample on every plan
     family and skip its window Exchange; (b) the memoized unresolved
-    aggregate/projection expressions (_build/_build_tiled FIFO memos)
+    aggregate/projection expressions (_build/_build_tiled memos)
     stay correct when one query plan contains the same (fn, window)
     twice (shared Column objects => shared alias ids across subtrees)."""
 
@@ -362,6 +363,8 @@ class TestPrevAttachedAndExprReuse:
             "event_type string, ts long, value double")
         monkeypatch.setattr(pe, "events_ts",
                             lambda s, d, series_cols=None, **kw: dirty)
+        memo = Memo(32)
+        monkeypatch.setattr(pe, "_EV_CACHE", memo)
         key = (id(spark), "__nan_guard_test__", ("event_type",))
         try:
             cached = pe._events_cached(spark, "__nan_guard_test__")
@@ -373,9 +376,8 @@ class TestPrevAttachedAndExprReuse:
             base = range_function(dirty, "rate", ["event_type"], grid, 3000)
             assert self._norm(out) == self._norm(base)
         finally:
-            frame = pe._EV_CACHE.pop(key, None)
-            if frame is not None:
-                frame.unpersist()
+            if key in memo:
+                memo.get(key, None).unpersist()
 
     def test_events_cache_attaches_on_clean_stream(self, spark, monkeypatch):
         # the guard must not disable the optimization on clean data
@@ -385,12 +387,13 @@ class TestPrevAttachedAndExprReuse:
             "event_type string, ts long, value double")
         monkeypatch.setattr(pe, "events_ts",
                             lambda s, d, series_cols=None, **kw: clean)
+        memo = Memo(32)
+        monkeypatch.setattr(pe, "_EV_CACHE", memo)
         key = (id(spark), "__nan_guard_clean__", ("event_type",))
         try:
             cached = pe._events_cached(spark, "__nan_guard_clean__")
             assert "prev_ts" in cached.columns
             assert "prev_value" in cached.columns
         finally:
-            frame = pe._EV_CACHE.pop(key, None)
-            if frame is not None:
-                frame.unpersist()
+            if key in memo:
+                memo.get(key, None).unpersist()

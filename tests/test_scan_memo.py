@@ -2,12 +2,16 @@
 (pruned scan + _sk key, and the per-series label frame) per (selector,
 range). The memo holds logical plans, never results; it must be
 bypassed whenever a stats collector is attached (its CollectMetrics
-node has to be fresh per query) and results must be identical with the
-memo on, off, and across repeated queries."""
+node has to be fresh per query) and results must be identical from a
+cold memo, a warm one, one that evicts, and across repeated and
+concurrent queries."""
+
+import threading
 
 import pytest
 from pyspark.sql import functions as F
 
+from filodb_spark.memo import Memo
 from filodb_spark.promql import PromQLEngine
 from filodb_spark.promql.compiler import TsStore
 from filodb_spark.promql.stats import QueryStatsCollector
@@ -35,20 +39,17 @@ class TestScanMemo:
         e, lo, hi = eng
         q = 'sum(rate(purchase[24h]))'
         first = _rows(e.query_range(q, lo, hi, 6 * 3600 * 1000))
-        assert e._scan_memo, "memo should hold the leaf fragment"
+        assert len(e._scan_memo), "memo should hold the leaf fragment"
         n_entries = len(e._scan_memo)
         again = _rows(e.query_range(q, lo, hi, 6 * 3600 * 1000))
         assert len(e._scan_memo) == n_entries   # hit, not a new entry
-        e._scan_memo = {}
+        e._scan_memo = Memo(64)
         cold = _rows(e.query_range(q, lo, hi, 6 * 3600 * 1000))
-        e._scan_memo = None                     # disabled entirely
-        off = _rows(e.query_range(q, lo, hi, 6 * 3600 * 1000))
-        e._scan_memo = {}
-        assert first == again == cold == off
+        assert first == again == cold
 
     def test_stats_collector_bypasses_memo(self, eng):
         e, lo, hi = eng
-        e._scan_memo = {}
+        e._scan_memo = Memo(64)
         q = 'sum(rate(purchase[24h]))'
         _rows(e.query_range(q, lo, hi, 6 * 3600 * 1000))  # populate memo
         col = QueryStatsCollector()
@@ -63,12 +64,41 @@ class TestScanMemo:
 
     def test_distinct_ranges_get_distinct_entries(self, eng):
         e, lo, hi = eng
-        e._scan_memo = {}
+        e._scan_memo = Memo(64)
         q = 'rate(purchase[24h])'
         e.query_range(q, lo, hi, 6 * 3600 * 1000)
         n1 = len(e._scan_memo)
         e.query_range(q, lo, hi - 3600 * 1000, 6 * 3600 * 1000)
         assert len(e._scan_memo) > n1           # different pruned range
+
+    def test_concurrent_serving_on_evicting_memo_equals_serial(self, eng):
+        # ThreadingHTTPServer handlers share one engine: four threads
+        # over distinct ranges on a memo that evicts on nearly every
+        # insert must return exactly what serial serving returns
+        e, lo, hi = eng
+        q = 'sum(rate(purchase[24h]))'
+        step = 6 * 3600 * 1000
+        ranges = [(lo, hi - k * 3600 * 1000) for k in range(4)]
+        e._scan_memo = Memo(64)
+        serial = [_rows(e.query_range(q, a, b, step)) for a, b in ranges]
+        e._scan_memo = Memo(2)
+        got, errors = [None] * len(ranges), []
+
+        def work(i):
+            try:
+                got[i] = _rows(e.query_range(q, *ranges[i], step))
+            except Exception as ex:       # noqa: BLE001 — asserted below
+                errors.append(ex)
+        threads = [threading.Thread(target=work, args=(i,))
+                   for i in range(len(ranges))]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(300)
+        e._scan_memo = Memo(64)
+        assert errors == []
+        assert got == serial
+        assert all(serial)
 
 
 class TestHashAggregableLabels:
