@@ -289,9 +289,6 @@ def main(argv=None) -> int:
     q.add_argument("--step", type=float, default=60.0)
     q.add_argument("--lookback", type=float, default=300.0)
     q.add_argument("--limit", type=int, default=None)
-    q.add_argument("--window-mode", default="auto",
-                   choices=["auto", "explode", "tiled", "asof"],
-                   help="windowing plan family (kernels/range_fns.py)")
     _add_ds_args(q)
     q.add_argument("--format", choices=["json", "table"], default="json")
     q.add_argument("--histogram-map", action="store_true",
@@ -306,8 +303,6 @@ def main(argv=None) -> int:
     sv.add_argument("--host", default="127.0.0.1")
     sv.add_argument("--port", type=int, default=9090)
     sv.add_argument("--lookback", type=float, default=300.0)
-    sv.add_argument("--window-mode", default="auto",
-                   choices=["auto", "explode", "tiled", "asof"])
     sv.add_argument("--token", default=None,
                     help="require Authorization: Bearer <token>")
     sv.add_argument("--tls-cert", default=None, help="PEM cert for TLS")
@@ -376,8 +371,8 @@ def main(argv=None) -> int:
         from filodb_spark.partkey import write_partkey_table
         # raw + hist rows count into `samples`; DS rows extend spans
         # only (they are derived from raw rows — counting them would
-        # double-count every live series, skewing the window-mode
-        # planner's density estimate)
+        # double-count every live series, skewing the window
+        # plan's scrape-interval estimate)
         df = spark.read.parquet(args.store).select("labels", "ts")
         if args.hist:
             df = df.unionByName(
@@ -398,8 +393,7 @@ def main(argv=None) -> int:
     if args.cmd == "query":
         from filodb_spark.api import to_matrix_response
         eng = PromQLEngine(spark, store,
-                           lookback_ms=int(args.lookback * 1000),
-                           window_mode=args.window_mode)
+                           lookback_ms=int(args.lookback * 1000))
         df = eng.query_range(args.promql, int(args.start * 1000),
                              int(args.end * 1000), int(args.step * 1000),
                              limit=args.limit)
@@ -413,8 +407,7 @@ def main(argv=None) -> int:
     if args.cmd == "serve":
         from filodb_spark.http_server import serve
         eng = PromQLEngine(spark, store,
-                           lookback_ms=int(args.lookback * 1000),
-                           window_mode=args.window_mode)
+                           lookback_ms=int(args.lookback * 1000))
         buf = None
         if args.enable_remote_write:
             from filodb_spark.remote_write import WriteBuffer

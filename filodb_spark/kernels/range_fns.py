@@ -533,215 +533,11 @@ RANGE_FUNCTIONS = (
 CUMULATIVE_COUNTER_FNS = frozenset({"rate", "increase", "irate"})
 
 
-# ---------------------------------------------------------------------------
-# As-of (prefix-sum) window evaluation: zero amplification
-# ---------------------------------------------------------------------------
-#
-# The tiled path caps the shuffle at O(series x n_steps x window/step) tile
-# rows; for the step==scrape worst case (one sample per step, ratio still
-# huge) even that term dominates. The as-of formulation removes the ratio
-# factor entirely, the way the reference's SlidingWindowIterator pays
-# O(samples) per series:
-#
-#   1. Per series, ONE sort establishes running prefix aggregates over the
-#      samples (count, sum, sum-of-squares, reset-correction sum, change/
-#      reset counts, each sample's prev pair) — window functions over a
-#      single Exchange+Sort.
-#   2. Two PROBE rows per (series, t) ride the same sort: an end probe at
-#      sort position (t, +1) and a start probe at (t - window, -1). Each
-#      probe inherits the prefix state at its position via
-#      last(..., ignorenulls) — the classic union as-of join, no range
-#      join, no explode.
-#   3. A window's aggregate is the DIFFERENCE of its two probes' prefixes
-#      (subtractable kernels), plus one equi-join back to the sample at
-#      index C_start+1 — the first sample in the window — for the rate
-#      family's extrapolation anchors and the pair-sum exclusions.
-#
-# Shuffle volume: O(samples + 2 x series x n_steps), independent of BOTH
-# sample density and window/step. Trade-offs vs tiled/explode (why this is
-# opt-in, `tiling="asof"`):
-#   - the per-series sort serializes one series per task: a single
-#     monster series becomes a straggler, where explode/tiled de-skew
-#     structurally (their shuffle keys contain the step index);
-#   - prefix-difference sums are subtractive: float cancellation grows
-#     with series length (bounded in practice; rounded outputs absorb it);
-#   - min/max and the regressions are not subtractable — not supported.
-# Semantics are identical to the explode path (equivalence battery in
-# tests/test_tiled_window.py, including randomized adversarial data).
-
-ASOF_SUPPORTED = frozenset(
-    "sum_over_time avg_over_time count_over_time stddev_over_time "
-    "stdvar_over_time last_over_time present_over_time timestamp changes "
-    "resets z_score idelta irate rate increase delta rate_delta "
-    "increase_delta".split())
-
-
-def _asof_range_function(df: DataFrame, fn: str, series_cols: Sequence[str],
-                         grid: StepGrid, window: int, params: tuple,
-                         carry_cols: Sequence[str]) -> DataFrame:
-    if fn not in ASOF_SUPPORTED:
-        raise ValueError(f"range function not supported on the as-of path: "
-                         f"{fn} (min/max and regressions are not "
-                         "prefix-subtractable; use tiled or explode)")
-    spark = df.sparkSession
-    v = F.col("value")
-
-    # probes: 2 per (series, t), riding the sample sort order
-    series_keys = df.select(*series_cols).distinct()
-    grid_df = spark.range(grid.n_steps).select(
-        (F.lit(grid.start) + F.col("id") * F.lit(grid.step)).cast("long")
-        .alias("t"))
-    probes = series_keys.crossJoin(grid_df).select(
-        *series_cols, "t",
-        F.explode(F.array(
-            F.struct((F.col("t") - F.lit(window)).alias("o"),
-                     F.lit(-1).alias("tie"), F.lit("s").alias("kind")),
-            F.struct(F.col("t").alias("o"),
-                     F.lit(1).alias("tie"), F.lit("e").alias("kind")),
-        )).alias("_p")) \
-        .select(*series_cols, "t", F.col("_p.o").alias("_o"),
-                F.col("_p.tie").alias("_tie"), F.col("_p.kind").alias("_kind"))
-    samples = df.select(*series_cols, *carry_cols,
-                        F.col("ts").alias("_o"), F.lit(0).alias("_tie"),
-                        F.lit(None).cast("string").alias("_kind"),
-                        F.lit(None).cast("long").alias("t"), v)
-    u = samples.unionByName(probes, allowMissingColumns=True)
-
-    from pyspark.sql import Window as W
-    order = W.partitionBy(*series_cols).orderBy("_o", "_tie")
-    cum = order.rowsBetween(W.unboundedPreceding, W.currentRow)
-    before = order.rowsBetween(W.unboundedPreceding, -1)
-    sample_ts = F.when(v.isNotNull(), F.col("_o"))
-    p1 = (u.withColumn("_idx", F.count(v).over(cum))
-           .withColumn("_S", F.sum(v).over(cum))
-           .withColumn("_SS", F.sum(v * v).over(cum))
-           .withColumn("_lts", F.last(sample_ts, ignorenulls=True).over(cum))
-           .withColumn("_lval", F.last(v, ignorenulls=True).over(cum))
-           .withColumn("_pts", F.last(sample_ts, ignorenulls=True).over(before))
-           .withColumn("_pval", F.last(v, ignorenulls=True).over(before)))
-    # pass 2: prefix sums of per-pair statistics (need pass-1 prev columns);
-    # same partitioning+order -> Catalyst reuses the single Exchange+Sort
-    has_pair = v.isNotNull() & F.col("_pval").isNotNull()
-    corr = F.when(has_pair & (v < F.col("_pval")), F.col("_pval")) \
-        .otherwise(F.when(v.isNotNull(), F.lit(0.0)))
-    chg = F.when(has_pair & (v != F.col("_pval")), 1) \
-        .otherwise(F.when(v.isNotNull(), F.lit(0)))
-    rst = F.when(has_pair & (v < F.col("_pval")), 1) \
-        .otherwise(F.when(v.isNotNull(), F.lit(0)))
-    pair = F.when(v.isNotNull(), F.struct(
-        F.col("_pts").alias("prev_ts"), F.col("_pval").alias("prev_val"),
-        F.col("_o").alias("last_ts"), v.alias("last_val")))
-    p2 = (p1.withColumn("_R", F.sum(corr).over(cum))
-            .withColumn("_CH", F.sum(chg).over(cum))
-            .withColumn("_RS", F.sum(rst).over(cum))
-            .withColumn("_pair", F.last(pair, ignorenulls=True).over(cum)))
-
-    # pivot the two probes of each (series, t) into one row
-    pr = p2.where(F.col("_kind").isNotNull())
-    e = F.col("_kind") == "e"
-
-    def side(col, which):
-        cond = e if which == "e" else ~e
-        return F.max(F.when(cond, F.col(col)))
-
-    gb = pr.groupBy(*series_cols, "t").agg(
-        F.coalesce(side("_idx", "e"), F.lit(0)).alias("_Ce"),
-        F.coalesce(side("_idx", "s"), F.lit(0)).alias("_Cs"),
-        F.coalesce(side("_S", "e"), F.lit(0.0)).alias("_Se"),
-        F.coalesce(side("_S", "s"), F.lit(0.0)).alias("_Ss"),
-        F.coalesce(side("_SS", "e"), F.lit(0.0)).alias("_SSe"),
-        F.coalesce(side("_SS", "s"), F.lit(0.0)).alias("_SSs"),
-        F.coalesce(side("_R", "e"), F.lit(0.0)).alias("_Re"),
-        F.coalesce(side("_CH", "e"), F.lit(0)).alias("_CHe"),
-        F.coalesce(side("_RS", "e"), F.lit(0)).alias("_RSe"),
-        side("_lts", "e").alias("_last_ts"),
-        side("_lval", "e").alias("_last_val"),
-        F.max(F.when(e, F.col("_pair"))).alias("_pair"),
-    ).withColumn("_cnt", (F.col("_Ce") - F.col("_Cs")).cast("long")) \
-     .where(F.col("_cnt") > 0)
-
-    # first sample in the window = sample at index C_start + 1 (equi-join);
-    # brings the rate anchors, the pair-prefix exclusion values, and any
-    # series-constant carry columns
-    firsts = p2.where(v.isNotNull()).select(
-        *series_cols, *carry_cols, F.col("_idx").alias("_fidx"),
-        F.col("_o").alias("_first_ts"), v.alias("_first_val"),
-        F.col("_R").alias("_Rf"), F.col("_CH").alias("_CHf"),
-        F.col("_RS").alias("_RSf"))
-    j = gb.withColumn("_fidx", F.col("_Cs") + 1) \
-          .join(firsts, [*series_cols, "_fidx"])
-
-    keys = [*series_cols, "t"]
-    cnt = F.col("_cnt").cast("double")
-    s = F.col("_Se") - F.col("_Ss")
-    ss = F.col("_SSe") - F.col("_SSs")
-    if fn == "sum_over_time":
-        out = s
-    elif fn == "count_over_time":
-        out = cnt
-    elif fn == "avg_over_time":
-        out = s / cnt
-    elif fn in ("stddev_over_time", "stdvar_over_time", "z_score"):
-        # prefix-difference cancellation can leave ~ulp(prefix) residue
-        # where the true variance is exactly 0 (constant window) — which
-        # would flip z_score's sd==0 NaN into garbage. Snap variance
-        # below the cancellation scale (1e-12 relative to the second
-        # moment) to exact zero.
-        var_raw = ss / cnt - (s / cnt) * (s / cnt)
-        var = F.when(var_raw <= F.lit(1e-12) * F.abs(ss / cnt), F.lit(0.0)) \
-            .otherwise(var_raw)
-        if fn == "stdvar_over_time":
-            out = var
-        elif fn == "stddev_over_time":
-            out = F.sqrt(var)
-        else:
-            sd = F.sqrt(var)
-            out = F.when(sd == 0.0, NAN()) \
-                .otherwise((F.col("_last_val") - s / cnt) / sd)
-    elif fn == "last_over_time":
-        out = F.col("_last_val")
-    elif fn == "present_over_time":
-        out = F.lit(1.0)
-    elif fn == "timestamp":
-        out = F.col("_last_ts") / 1000.0
-    elif fn == "changes":
-        out = (F.col("_CHe") - F.col("_CHf")).cast("double")
-    elif fn == "resets":
-        out = (F.col("_RSe") - F.col("_RSf")).cast("double")
-    elif fn in ("idelta", "irate"):
-        p = F.col("_pair")
-        have = p["prev_ts"].isNotNull() & \
-            (p["prev_ts"] >= F.col("t") - F.lit(window))
-        if fn == "idelta":
-            out = F.when(have, p["last_val"] - p["prev_val"]).otherwise(NAN())
-        else:
-            dv = F.when(p["last_val"] >= p["prev_val"],
-                        p["last_val"] - p["prev_val"]).otherwise(p["last_val"])
-            dt = (p["last_ts"] - p["prev_ts"]).cast("double") / 1000.0
-            out = F.when(have & (dt > 0), dv / dt).otherwise(NAN())
-    elif fn in ("rate", "increase", "delta"):
-        # in-window pairs are exactly those ending at samples
-        # (first_idx, last_idx]: prefix difference, no edge case;
-        # _cnt/_first_*/_last_* already carry the aliases
-        # _extrapolated_expr reads
-        j = j.withColumn("_reset_corr", F.col("_Re") - F.col("_Rf"))
-        post = _extrapolated_expr(window, fn in ("rate", "increase"),
-                                  fn == "rate")
-        return j.select(*keys, *carry_cols, post.alias("value"))
-    elif fn == "rate_delta":
-        out = s / F.lit(window / 1000.0)
-    elif fn == "increase_delta":
-        out = s
-    else:  # pragma: no cover — guarded by ASOF_SUPPORTED above
-        raise AssertionError(fn)
-    return j.select(*keys, *carry_cols, out.alias("value"))
-
-
 def range_function(df: DataFrame, fn: str, series_cols: Sequence[str],
                    grid: StepGrid, window: int, params: tuple = (),
                    ts_col: str = "ts", value_col: str = "value",
                    carry_cols: Sequence[str] = (),
-                   tiling: bool | str | None = None,
+                   tiling: bool | None = None,
                    honor_stale_marker: bool = False,
                    prev_attached: bool = False) -> DataFrame:
     """Evaluate PromQL range function `fn` on the step grid.
@@ -753,14 +549,13 @@ def range_function(df: DataFrame, fn: str, series_cols: Sequence[str],
     a canonical key) carried through the aggregation with first() —
     avoids a re-join to recover them.
 
-    `tiling`: None = auto (two-level tiled plan when the fn is
-    associative-decomposable and window/step >= TILE_RATIO — caps shuffle
-    amplification at the tile count instead of sample count x ratio);
-    True = force tiled (tileable fns only); False = always grid-explode;
-    "asof" = the opt-in prefix-sum/as-of plan with NO amplification at
-    all — O(samples + 2 x series x n_steps) shuffle rows regardless of
-    window/step AND density (ASOF_SUPPORTED fns only; per-series sort,
-    see the skew note above _asof_range_function).
+    `tiling` picks one of the two plans. None = choose from the query:
+    the two-level tiled plan when the fn is associative-decomposable and
+    window/step >= TILE_RATIO (caps shuffle amplification at the tile
+    count instead of sample count x ratio), grid explode otherwise.
+    False = grid explode (the engine passes it when the part-key scrape
+    estimate says tile groups would hold ~1 sample); True = tiled
+    (tileable fns only; the tiled-vs-explode equivalence tests use it).
 
     `prev_attached`: the caller already carries ``prev_ts``/``prev_value``
     columns computed exactly as :func:`grid.with_prev_sample` would here —
@@ -775,8 +570,8 @@ def range_function(df: DataFrame, fn: str, series_cols: Sequence[str],
     semantics of the reference's LastSampleChunkedFunctionD
     (RangeFunction.scala:541-546); the default (skip NaN, return the
     last real sample) matches its sliding/subquery LastSampleFunction.
-    Works on all three plan families: the last-sample combiner is
-    max_by(v, ts) everywhere, which is NaN-transparent.
+    Works on both plans: the last-sample combiner is max_by(v, ts)
+    everywhere, which is NaN-transparent.
     """
     if prev_attached and not {"prev_ts", "prev_value"} <= set(df.columns):
         # the producer declined to attach (e.g. _events_cached found
@@ -813,11 +608,6 @@ def range_function(df: DataFrame, fn: str, series_cols: Sequence[str],
         # latest sample was a staleness marker -> series absent at step
         return out.where(~F.isnan("value")) if stale_last else out
 
-    if tiling == "asof":
-        # opt-in zero-amplification path (see _asof_range_function for
-        # the skew/precision trade that keeps it off the auto-switch)
-        return _stale_filter(_asof_range_function(
-            df, fn, series_cols, grid, window, params, carry_cols))
     if tiling is None:
         tiling = fn in TILEABLE and window // grid.step >= TILE_RATIO
     if tiling:
@@ -893,8 +683,8 @@ def counter_correct(df: DataFrame, series_cols: Sequence[str],
     PeriodicSamplesMapper.scala:547-566): every dip adds the previous
     value to a per-series running correction, so the output never
     decreases; a NaN sample reads as 0 (the explicit end-of-series
-    counter-reset marker). One window spec per series — the same
-    Exchange+Sort the as-of kernels ride, no per-row Python.
+    counter-reset marker). One window spec per series — a single
+    Exchange+Sort, no per-row Python.
 
     Standalone spec-parity kernel: the production rate/increase path
     corrects in-window instead (sum-of-dips there equals corrected

@@ -155,7 +155,7 @@ def write_partkey_table(samples_df: DataFrame, path: str,
     ds_samples_df: downsample-table rows. Pass these HERE instead of
     unioning them into samples_df — DS rows are derived from raw rows,
     so a plain union double-counts every live series' `samples`
-    (which feeds the window-mode planner's density estimate). Spans
+    (which feeds the window plan's scrape-interval estimate). Spans
     merge per key; `samples` stays raw-side, like partkey_from_store.
     Implies covers_ds=True unless overridden."""
     merged = partkey_from_samples(samples_df)

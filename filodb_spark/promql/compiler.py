@@ -29,7 +29,8 @@ from filodb_spark.kernels import aggregations as agg_k
 from filodb_spark.kernels import binary as bin_k
 from filodb_spark.kernels.grid import STALE_SAMPLE_AFTER_MS, StepGrid
 from filodb_spark.kernels.instant_fns import INSTANT_FUNCTIONS, instant_fn_expr
-from filodb_spark.kernels.range_fns import range_function
+from filodb_spark.kernels.range_fns import (TILE_RATIO, TILEABLE,
+                                            range_function)
 from filodb_spark.memo import Memo
 from filodb_spark.promql import ast as A
 from filodb_spark.promql.parser import parse
@@ -742,21 +743,10 @@ class PromQLEngine:
                  lookback_ms: int = STALE_SAMPLE_AFTER_MS,
                  retention_floor_ms: int | None = None,
                  groupby_cardinality_limit: int | None = None,
-                 join_query_cardinality: int | None = None,
-                 window_mode: str = "auto"):
+                 join_query_cardinality: int | None = None):
         self.spark = spark
         self.store = store
         self.lookback_ms = lookback_ms
-        # windowing plan family for range functions (kernels/range_fns):
-        #   auto    — grid explode, tiled two-level above TILE_RATIO
-        #   explode — always grid explode
-        #   tiled   — force tiled where the kernel supports it
-        #   asof    — prefix-sum/as-of (zero amplification; per-series
-        #             sort — see _asof_range_function's skew note) where
-        #             supported, auto elsewhere
-        if window_mode not in ("auto", "explode", "tiled", "asof"):
-            raise ValueError(f"unknown window_mode {window_mode!r}")
-        self.window_mode = window_mode
         # boundToStartTimeToEarliestRetained
         # (SingleClusterPlanner.scala:873-897)
         self.retention_floor_ms = retention_floor_ms
@@ -1183,33 +1173,17 @@ class PromQLEngine:
                 out = out.join(cw, ["_sk", "t"], "left")
         return out
 
-    def _tiling_arg(self, fn: str, sel: A.VectorSelector | None = None,
-                    grid: StepGrid | None = None,
-                    window: int | None = None):
-        """Map the engine's window_mode to range_function's tiling param,
-        falling back to auto where the mode doesn't support the fn.
+    def _tiling_arg(self, fn: str, sel: A.VectorSelector, grid: StepGrid,
+                    window: int) -> bool | None:
+        """range_function's tiling param: False (grid explode) in the
+        sparse regime, None (range_function's own ratio rule) otherwise.
 
-        window_mode="auto" is additionally DENSITY-AWARE when the
-        part-key table is attached: the tiled plan's win is collapsing
-        many in-window samples per (series, k_min, k_max) group, but in
-        the sparse regime (scrape interval >= step) groups are ~1 sample
-        each, so tiling only pays its documented ~2x pair-stream group
-        overhead — estimate the scrape interval from the index's
-        per-series (samples, span) stats and stay on explode there.
-        The asof plan is NEVER auto-selected: its per-series sort
-        serializes monster series (skew note in _asof_range_function) —
-        it stays behind the explicit window_mode/tiling opt-in."""
-        from filodb_spark.kernels.range_fns import (ASOF_SUPPORTED,
-                                                    TILE_RATIO, TILEABLE)
-        m = self.window_mode
-        if m == "explode":
-            return False
-        if m == "tiled" and fn in TILEABLE:
-            return True
-        if m == "asof" and fn in ASOF_SUPPORTED:
-            return "asof"
-        if (m == "auto" and sel is not None and grid is not None
-                and fn in TILEABLE and window // grid.step >= TILE_RATIO):
+        The tiled plan's win is collapsing many in-window samples per
+        (series, k_min, k_max) group; when the part-key table is attached
+        and its per-series (samples, span) stats put the scrape interval
+        at or above the step, groups hold ~1 sample each and tiling only
+        pays its ~2x pair-stream group overhead, so stay on explode."""
+        if fn in TILEABLE and window // grid.step >= TILE_RATIO:
             scrape = self._estimate_scrape_ms(sel)
             if scrape is not None and scrape >= grid.step:
                 return False
@@ -1440,10 +1414,9 @@ class PromQLEngine:
     def _absent_from(self, present: DataFrame, sel: A.VectorSelector,
                      grid: StepGrid) -> DataFrame:
         """AbsentFunctionMapper (RangeVectorTransformer.scala:422-480):
-        emit 1 at steps with no input series; labels from = matchers."""
+        emit 1 at steps with no input series; labels from = matchers.
+        The metric name is not part of absent() labels."""
         entries = [(m.name, m.value) for m in sel.matchers if m.op == "="]
-        if sel.metric:
-            pass  # metric name is not included in absent() labels
         lab = F.create_map(*[F.lit(x) for kv in entries for x in kv]) \
             if entries else F.create_map().cast("map<string,string>")
         present_ts = present.select("t").distinct()

@@ -74,19 +74,15 @@ def main():
     grid = StepGrid(WINDOW, RANGE_MS, STEP)
     print(f"rate(m[{WINDOW//60000}m]) @ {STEP//1000}s step, ratio "
           f"{WINDOW//STEP}, {N_SERIES} series, 24h span, n_steps={grid.n_steps}")
-    # as-of sorted-stream rows: samples + 2 probes per (series, t) —
-    # independent of BOTH density and ratio
-    r_asof_fixed = 2 * N_SERIES * grid.n_steps
     print(f"{'scrape':>8} {'samples':>10} | {'explode_rows':>12} {'t_explode':>9} "
-          f"| {'tiled_rows':>10} {'t_tiled':>8} | {'asof_rows':>10} {'t_asof':>7} "
-          f"| {'equal':>5}")
+          f"| {'tiled_rows':>10} {'t_tiled':>8} | {'equal':>5}")
 
     def vals(df_out):
         return {(r["series"], r["t"]): r["value"] for r in df_out.collect()}
 
-    def eq(ca, cb, tol=1e-12):
+    def eq(ca, cb):
         return set(ca) == set(cb) and all(
-            math.isclose(ca[k], cb[k], rel_tol=1e-9, abs_tol=tol)
+            math.isclose(ca[k], cb[k], rel_tol=1e-9, abs_tol=1e-12)
             or (math.isnan(ca[k]) and math.isnan(cb[k])) for k in ca)
 
     for scrape in densities:
@@ -102,17 +98,9 @@ def main():
         cb = vals(range_function(df, "rate", ["series"], grid, WINDOW,
                                  tiling=True))
         t_ti = time.time() - t0
-        r_as = n + r_asof_fixed
-        t0 = time.time()
-        cc = vals(range_function(df, "rate", ["series"], grid, WINDOW,
-                                 tiling="asof"))
-        t_as = time.time() - t0
-        # asof reset-corr is a prefix difference: allow the documented
-        # cancellation tolerance on top of bit-parity for the other two
-        equal = eq(ca, cb) and eq(ca, cc, tol=1e-6)
+        equal = eq(ca, cb)
         print(f"{scrape/1000:>7.0f}s {n:>10,} | {r_ex:>12,} {t_ex:>8.1f}s "
-              f"| {r_ti:>10,} {t_ti:>7.1f}s | {r_as:>10,} {t_as:>6.1f}s "
-              f"| {str(equal):>5}")
+              f"| {r_ti:>10,} {t_ti:>7.1f}s | {str(equal):>5}")
         df.unpersist()
 
 

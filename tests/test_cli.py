@@ -34,19 +34,6 @@ class TestCli:
         assert len(resp["data"]["result"]) == 1
         assert len(resp["data"]["result"][0]["values"]) > 50
 
-    def test_query_window_mode(self, spark):
-        """--window-mode selects the plan family; asof must return the
-        same values as the default on the same query."""
-        args = ["query", "sum(count_over_time(purchase[24h]))",
-                "--store", STORE,
-                "--start", "1704153600", "--end", "1706486400",
-                "--step", "21600"]
-        _, base = run_cli(args)
-        _, asof = run_cli(args + ["--window-mode", "asof"])
-        a = json.loads(base)["data"]["result"][0]["values"]
-        b = json.loads(asof)["data"]["result"][0]["values"]
-        assert a == b and len(a) > 50
-
     def test_labels_and_values(self, spark):
         rc, out = run_cli(["labels", "--store", STORE])
         assert json.loads(out) == ["__name__", "_type_", "user"]
@@ -244,8 +231,8 @@ def test_partkey_build_with_ds_tables(spark, tmp_path):
     assert pk_df.agg(F.min("first_ts")).first()[0] < boundary
     # `samples` stays the RAW-side count — DS rows extend spans only
     # (they are derived from raw rows; unioning them in would
-    # double-count every live series and skew the window-mode
-    # planner's density estimate)
+    # double-count every live series and skew the window plan's
+    # scrape-interval estimate)
     from filodb_spark.kernels.binary import canonical_labels
     from filodb_spark.partkey import merge_partkey_rows
     raw_counts = (spark.read.parquet(table)

@@ -624,8 +624,8 @@ class TestDownsampleMetadata:
             self, spark, samples, tmp_path):
         """ds_samples_df extends SPANS only: a live series' `samples`
         stays the raw-side count (DS rows are derived from raw rows —
-        a plain union would double-count, skewing the window-mode
-        planner's density estimate), and a retired DS-only series gets
+        a plain union would double-count, skewing the window plan's
+        scrape-interval estimate), and a retired DS-only series gets
         the DS count as a stand-in. covers_ds defaults to True."""
         from filodb_spark.partkey import (read_partkey_manifest,
                                           read_partkey_table)

@@ -104,7 +104,7 @@ STEP_FACTOR_SAMPLES = [
     (1_300_000, 600.0)]
 
 
-@pytest.mark.parametrize("tiling", [False, "asof"])
+@pytest.mark.parametrize("tiling", [False])
 def test_increase_step_factor_window_equals_step(spark, tiling):
     # :111-152 — increase[4m==step] on the 500000..1300000 grid; the
     # publish-interval padding is commented out in the reference, so
@@ -130,7 +130,7 @@ RESETS_TAIL_NANS = [(100_000, NAN), (120_000, 100.0), (153_000, 20.0),
 
 @pytest.mark.parametrize("samples", [RESETS_TO_NAN, RESETS_TAIL_NANS],
                          ids=["value-to-NaN", "consecutive-NaNs"])
-@pytest.mark.parametrize("tiling", [False, True, "asof"])
+@pytest.mark.parametrize("tiling", [False, True])
 def test_resets_never_counts_nan_transitions(spark, samples, tiling):
     # :154-199 — only 100 -> 20 is a reset; 20 -> NaN, NaN -> NaN and
     # NaN -> 100 never count

@@ -316,6 +316,57 @@ class TestPlanTimeLimits:
         assert all(g and g.startswith("query-") for g in groups), groups
         assert len(set(groups)) == 4      # one group per request
 
+    def test_timeout_cancels_estimate_job(self, eng, monkeypatch):
+        # a request that times out during its plan-limit estimate gets
+        # its 503 at the deadline, and the estimate's Spark job is
+        # cancelled with the request's job group
+        import time
+        from filodb_spark.http_server import serve
+        e, lo, hi, _ = eng
+        sc = e.spark.sparkContext
+        groups = []
+
+        def nap(rows):
+            time.sleep(30)
+            return rows
+
+        def slow_estimate(self, *args, **kwargs):
+            groups.append(sc.getLocalProperty("spark.jobGroup.id"))
+            sc.parallelize([0], 1).mapPartitions(nap).count()
+            return 0
+        monkeypatch.setattr(type(e), "estimate_time_series_scanned",
+                            slow_estimate)
+        srv = serve(e, warn_limits=PerQueryLimits(
+            enforce_time_series_scanned=10 ** 6))
+        try:
+            host, port = srv.server_address
+            url = (f"http://{host}:{port}/promql/ds/api/v1/query_range"
+                   f"?query=sum(rate(purchase[24h]))"
+                   f"&start={lo / 1000}&end={hi / 1000}&step=21600"
+                   f"&timeout=1s")
+            t0 = time.monotonic()
+            with pytest.raises(urllib.error.HTTPError) as ei:
+                urllib.request.urlopen(url, timeout=20)
+            assert time.monotonic() - t0 < 5
+            assert ei.value.code == 503
+            assert json.loads(ei.value.read())["errorType"] == "timeout"
+        finally:
+            srv.shutdown()
+        [group] = groups
+        assert group and group.startswith("query-")
+        tracker = sc.statusTracker()
+        jobs = tracker.getJobIdsForGroup(group)
+        assert jobs                       # the estimate job did start
+
+        def running():
+            return [j for j in tracker.getJobIdsForGroup(group)
+                    if (info := tracker.getJobInfo(j)) is not None
+                    and info.status == "RUNNING"]
+        deadline = time.monotonic() + 15
+        while running() and time.monotonic() < deadline:
+            time.sleep(0.2)
+        assert not running()
+
     def test_engine_level_enforce(self, eng):
         from filodb_spark.promql.compiler import QueryLimitException
         e, lo, hi, _ = eng

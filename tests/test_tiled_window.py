@@ -15,8 +15,7 @@ from pyspark.sql import functions as F
 
 from filodb_spark.kernels.grid import StepGrid
 from filodb_spark.kernels import range_fns
-from filodb_spark.kernels.range_fns import (ASOF_SUPPORTED, TILEABLE,
-                                            range_function)
+from filodb_spark.kernels.range_fns import TILEABLE, range_function
 
 STEP = 10_000
 WINDOW = 320_000  # window/step = 32 >= TILE_RATIO -> auto-tiled
@@ -65,13 +64,6 @@ def _same(a, b, abs_tol=1e-12):
     if math.isnan(a):
         return math.isnan(b)
     return math.isclose(a, b, rel_tol=1e-9, abs_tol=abs_tol)
-
-
-# prefix-difference kernels carry the documented subtractive-cancellation
-# residue ~ulp(prefix sum): a true-zero variance window can come back as
-# ~1e-7 stddev. Bounded by series length; rounded outputs absorb it.
-_ASOF_ABS_TOL = {"stddev_over_time": 1e-5, "stdvar_over_time": 1e-5,
-                 "z_score": 1e-5}
 
 
 @pytest.mark.parametrize("fn", sorted(TILEABLE))
@@ -149,55 +141,6 @@ def test_carry_cols_survive_tiling(spark):
     assert rows and all(r["extra"] == "lbl-a" for r in rows)
 
 
-@pytest.mark.slow
-@pytest.mark.parametrize("fn", sorted(ASOF_SUPPORTED))
-def test_asof_equals_explode(spark, samples, fn):
-    """The prefix-sum/as-of plan (zero amplification) must agree with
-    the explode plan for every supported kernel — including the
-    inclusive [t-window, t] boundary samples (the start probe's
-    tie-break makes the boundary sample count on the window side)."""
-    params = PARAMS.get(fn, ())
-    a = _rows_map(range_function(samples, fn, ["series"], GRID, WINDOW,
-                                 params=params, tiling="asof"))
-    b = _rows_map(range_function(samples, fn, ["series"], GRID, WINDOW,
-                                 params=params, tiling=False))
-    assert set(a) == set(b)
-    tol = _ASOF_ABS_TOL.get(fn, 1e-12)
-    bad = [(k, a[k], b[k]) for k in a if not _same(a[k], b[k], tol)]
-    assert not bad, f"{fn}: {bad[:5]} (+{len(bad)} total)"
-
-
-def test_asof_plan_has_no_explode(spark, samples):
-    out = range_function(samples, "rate", ["series"], GRID, WINDOW,
-                         tiling="asof")
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    # the SAMPLE stream must never be amplified — assert by the absence
-    # of sequence-explode (the amplifying construct of the other two
-    # paths) and the presence of the running-window operator. (The plan
-    # DOES contain one BroadcastNestedLoopJoin: the intentional
-    # distinct-series x grid cross join that BUILDS the probe rows —
-    # both sides are result-cardinality-sized, never samples.)
-    assert "sequence(" not in plan
-    assert "Window" in plan
-
-
-def test_asof_rejects_unsupported(spark, samples):
-    with pytest.raises(ValueError, match="as-of"):
-        range_function(samples, "min_over_time", ["series"], GRID, WINDOW,
-                       tiling="asof")
-
-
-def test_asof_carry_cols(spark):
-    df = spark.createDataFrame(
-        [("a", "lbl-a", 1_000_000 + i * 1_000, float(i)) for i in range(200)],
-        "series string, extra string, ts long, value double")
-    out = range_function(df, "rate", ["series"],
-                         StepGrid(1_000_000, 1_200_000, 5_000), 160_000,
-                         carry_cols=["extra"], tiling="asof")
-    rows = out.collect()
-    assert rows and all(r["extra"] == "lbl-a" for r in rows)
-
-
 def test_hist_rate_inherits_tiling(spark):
     """hist_range_function bucket-explodes then delegates to
     range_function — histogram rate at a high window/step ratio must
@@ -237,9 +180,10 @@ def test_hist_rate_inherits_tiling(spark):
 
 
 @pytest.mark.slow
-class TestEngineWindowMode:
-    """PromQLEngine(window_mode=...) — the user-facing switch between
-    the three plan families; results must agree across all of them."""
+class TestEnginePlanParity:
+    """PromQLEngine results must not depend on which window plan the
+    engine picks: each plan is forced by substituting the engine's
+    `_tiling_arg` (the argument it hands range_function)."""
 
     @pytest.fixture(scope="class")
     def labels_df(self, spark):
@@ -257,26 +201,26 @@ class TestEngineWindowMode:
         "rate(m[4m])", "sum_over_time(m[4m])",
         "sum(rate(m[4m]))", "min_over_time(m[4m])",
     ])
-    def test_modes_agree(self, spark, labels_df, promql):
+    def test_plans_agree(self, spark, labels_df, promql, monkeypatch):
         from filodb_spark.promql.compiler import PromQLEngine, TsStore
+        real = PromQLEngine._tiling_arg
+        forced = {"auto": real,
+                  "explode": lambda self, fn, *a: False,
+                  "tiled": lambda self, fn, *a: True if fn in TILEABLE
+                  else real(self, fn, *a)}
         res = {}
-        for mode in ("auto", "explode", "tiled", "asof"):
-            eng = PromQLEngine(spark, TsStore(labels_df),
-                               window_mode=mode)
+        for plan, arg in forced.items():
+            monkeypatch.setattr(PromQLEngine, "_tiling_arg", arg)
+            eng = PromQLEngine(spark, TsStore(labels_df))
             rows = eng.query_range(promql, 1_300_000, 1_600_000,
                                    5_000).collect()
-            res[mode] = {(tuple(sorted(r["labels"].items())), r["t"]):
+            res[plan] = {(tuple(sorted(r["labels"].items())), r["t"]):
                          r["value"] for r in rows}
         base = res["explode"]
-        for mode in ("auto", "tiled", "asof"):
-            assert set(res[mode]) == set(base), mode
-            bad = [k for k in base if not _same(res[mode][k], base[k], 1e-9)]
-            assert not bad, (mode, promql, bad[:3])
-
-    def test_bad_mode_rejected(self, spark, labels_df):
-        from filodb_spark.promql.compiler import PromQLEngine, TsStore
-        with pytest.raises(ValueError, match="window_mode"):
-            PromQLEngine(spark, TsStore(labels_df), window_mode="banana")
+        for plan in ("auto", "tiled"):
+            assert set(res[plan]) == set(base), plan
+            bad = [k for k in base if not _same(res[plan][k], base[k], 1e-9)]
+            assert not bad, (plan, promql, bad[:3])
 
 
 def _random_dataset(seed):
@@ -329,16 +273,11 @@ def test_tiled_equals_explode_randomized(spark, seed):
         params = PARAMS.get(fn, ())
         b = _rows_map(range_function(df, fn, ["series"], grid, window,
                                      params=params, tiling=False))
-        variants = [("tiled", True)]
-        if fn in ASOF_SUPPORTED:
-            variants.append(("asof", "asof"))
-        for label, mode in variants:
-            a = _rows_map(range_function(df, fn, ["series"], grid, window,
-                                         params=params, tiling=mode))
-            assert set(a) == set(b), (fn, label, seed)
-            tol = _ASOF_ABS_TOL.get(fn, 1e-12) if label == "asof" else 1e-12
-            bad = [(k, a[k], b[k]) for k in a if not _same(a[k], b[k], tol)]
-            assert not bad, (fn, label, seed, bad[:3], len(bad))
+        a = _rows_map(range_function(df, fn, ["series"], grid, window,
+                                     params=params, tiling=True))
+        assert set(a) == set(b), (fn, seed)
+        bad = [(k, a[k], b[k]) for k in a if not _same(a[k], b[k])]
+        assert not bad, (fn, seed, bad[:3], len(bad))
 
 
 def test_tile_count_independent_of_density(spark):

@@ -71,7 +71,7 @@ class TestPeriodicRateFunctionsSpec:
              (8132570, 52.0), (8142822, 95.0), (8152858, 7.0),
              (8162999, 99.0)]
 
-    @pytest.mark.parametrize("tiling", [False, True, "asof"])
+    @pytest.mark.parametrize("tiling", [False, True])
     def test_rate_over_delta_golden(self, spark, tiling):
         want = sum(v for _, v in self.DELTA) / WINDOW * 1000
         got = _run(spark, self.DELTA, "rate_delta", tiling=tiling)
@@ -100,7 +100,7 @@ class TestResetsFunctionNaN:
     consecutive REAL-value decreases; NaN samples are skipped, never
     treated as 0."""
 
-    @pytest.mark.parametrize("tiling", [False, True, "asof"])
+    @pytest.mark.parametrize("tiling", [False, True])
     @pytest.mark.parametrize("samples,want", [
         ([(1000, 5.0), (2000, NAN)], 0.0),                 # NaN after real
         ([(1000, 5.0), (2000, NAN), (3000, 7.0)], 0.0),    # NaN between ups
@@ -207,7 +207,7 @@ class TestChangesFunctionSpec:
     ]
 
     @pytest.mark.parametrize("samples,want", CASES)
-    @pytest.mark.parametrize("tiling", [False, True, "asof"])
+    @pytest.mark.parametrize("tiling", [False, True])
     def test_golden_all_plan_families(self, spark, samples, want, tiling):
         got = _run(spark, samples, "changes", tiling=tiling)
         assert got == want

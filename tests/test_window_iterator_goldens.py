@@ -1,11 +1,11 @@
-"""WindowIteratorSpec goldens, evaluated by EVERY plan family.
+"""WindowIteratorSpec goldens, evaluated by BOTH window plans.
 
 Sample tables and expected outputs ported from the reference's
 window-iterator tests (query/src/test/scala/filodb/query/exec/
 WindowIteratorSpec.scala — values only, the execution model here is the
 declarative DataFrame plans). Each golden is asserted against the
-grid-explode, tiled, and as-of paths, so the reference's
-SlidingWindowIterator/ChunkedWindowIterator behavior pins all three.
+grid-explode and tiled paths, so the reference's
+SlidingWindowIterator/ChunkedWindowIterator behavior pins both.
 
 Window semantics note: the reference runs these with
 inclusive-range=true (filodb-defaults.conf), which the sum golden
@@ -23,7 +23,7 @@ import pytest
 from filodb_spark.kernels.grid import StepGrid
 from filodb_spark.kernels.range_fns import range_function
 
-MODES = [("explode", False), ("tiled", True), ("asof", "asof")]
+MODES = [("explode", False), ("tiled", True)]
 
 
 def _run(spark, samples, fn, grid, window, mode):
@@ -193,8 +193,6 @@ SPARSE_EXPECTED = {
 @pytest.mark.parametrize("name,mode", MODES)
 @pytest.mark.parametrize("fn", sorted(SPARSE_EXPECTED))
 def test_sparse_window_goldens(spark, fn, name, mode):
-    if mode == "asof" and fn in ("min_over_time", "max_over_time"):
-        pytest.skip("min/max are not prefix-subtractable (documented)")
     got = _run(spark, SPARSE_SAMPLES, fn,
                StepGrid(50000, 700000, 100000), 100000, mode)
     assert got == SPARSE_EXPECTED[fn], (fn, name)

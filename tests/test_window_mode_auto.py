@@ -1,12 +1,10 @@
-"""Density-aware window-mode auto-selection (r7 verdict item 3).
+"""Density-aware window-plan selection (r7 verdict item 3).
 
-With the part-key table attached, window_mode="auto" estimates the
-scrape interval at plan time (one O(series) aggregate on the index) and
-skips the tiled plan in the sparse regime (scrape >= step), where tile
-groups hold ~1 sample each and tiling only pays its pair-stream group
-overhead. The asof plan is never auto-selected (per-series sort
-serializes monster series); the explicit window_mode override always
-wins. Results are pinned identical across the selected plans.
+With the part-key table attached, the engine estimates the scrape
+interval at plan time (one O(series) aggregate on the index) and skips
+the tiled plan in the sparse regime (scrape >= step), where tile groups
+hold ~1 sample each and tiling only pays its pair-stream group
+overhead. Results are pinned identical across the selected plans.
 """
 
 from __future__ import annotations
@@ -84,40 +82,15 @@ def test_no_index_keeps_static_behavior(spark, monkeypatch):
     assert seen == [None]
 
 
-def test_explicit_mode_overrides_density(spark, monkeypatch):
-    df = _corpus(spark, scrape_ms=2 * STEP)
-    store = TsStore(df, partkey_df=partkey_from_samples(df))
-    eng = PromQLEngine(spark, store, window_mode="tiled")
-    seen = _spy_tiling(monkeypatch, eng)
-    _run_rate(eng).collect()
-    assert seen == [True]
-
-
-def test_auto_never_selects_asof(spark):
-    # monster-series skew corpus: one series carries 99% of samples —
-    # auto must still not pick the asof plan (its per-series sort would
-    # serialize that series into one task)
-    dense = _corpus(spark, scrape_ms=5_000, n_series=1)
-    sparse = _corpus(spark, scrape_ms=600_000, n_series=3) \
-        .withColumn("labels", F.map_concat(
-            "labels", F.create_map(F.lit("skew"), F.lit("tail"))))
-    df = dense.unionByName(sparse)
-    store = TsStore(df, partkey_df=partkey_from_samples(df))
-    eng = PromQLEngine(spark, store)
-    g = StepGrid(WINDOW, 4 * 3_600_000, STEP)
-    for fn in ("rate", "sum_over_time", "last_over_time"):
-        arg = eng._tiling_arg(fn, __import__(
-            "filodb_spark.promql.parser", fromlist=["parse"]).parse("m"),
-            g, WINDOW)
-        assert arg != "asof"
-
-
-def test_results_identical_across_selected_plans(spark):
+def test_results_identical_across_selected_plans(spark, monkeypatch):
+    # each plan forced by substituting the engine's tiling argument
     df = _corpus(spark, scrape_ms=2 * STEP)
     store = TsStore(df, partkey_df=partkey_from_samples(df))
     outs = []
-    for mode in ("auto", "explode", "tiled"):
-        eng = PromQLEngine(spark, store, window_mode=mode)
+    for arg in (PromQLEngine._tiling_arg, lambda self, *a: False,
+                lambda self, *a: True):
+        monkeypatch.setattr(PromQLEngine, "_tiling_arg", arg)
+        eng = PromQLEngine(spark, store)
         out = _run_rate(eng).select(
             F.col("labels")["inst"].alias("inst"), "t",
             F.round("value", 9).alias("value"))
