@@ -8,7 +8,7 @@ Reference: ``InstantVectorFunctionMapper`` applying ``InstantFunctionId``
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 def NAN() -> Column:
@@ -28,10 +28,6 @@ def _log_like(expr: Column, v: Column) -> Column:
     return F.coalesce(
         expr,
         F.when(v == 0.0, F.lit(float("-inf"))).otherwise(NAN()))
-
-
-def _ts_utc(t_ms: Column):
-    return F.timestamp_millis(t_ms.cast("long"))
 
 
 def _pcol(p) -> Column:
@@ -140,8 +136,3 @@ INSTANT_FUNCTIONS = (
     "or_vector day_of_month day_of_week days_in_month hour minute month year "
     "sin cos tan asin acos atan sinh cosh tanh deg rad"
 ).split()
-
-
-def apply_instant_fn(df: DataFrame, fn: str, params: tuple = (),
-                     value_col: str = "value") -> DataFrame:
-    return df.withColumn(value_col, instant_fn_expr(fn, F.col(value_col), params))

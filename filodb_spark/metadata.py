@@ -78,7 +78,7 @@ def _ds_scan(store: TsStore, sel: VectorSelector | None) -> DataFrame | None:
             df = _apply_label_matchers(
                 df, [m for m in sel.matchers if m.name != "_type_"])
             for m in (m for m in sel.matchers if m.name == "_type_"):
-                df = df.where(_type_expr(store, F.col("labels")["__name__"])
+                df = df.where(store.type_expr(F.col("labels")["__name__"])
                               == m.value)
         frames.append(df)
     if not frames:
@@ -176,7 +176,7 @@ def label_values(store: TsStore, label: str, match: str | None = None,
     on the part-key table instead of O(samples)). `_type_` is queryable
     like any stored label (it lives in the reference's part keys)."""
     rows = _series_rows(store, match, start_ms, end_ms)
-    value = (_type_expr(store, F.col("labels")["__name__"])
+    value = (store.type_expr(F.col("labels")["__name__"])
              if label == "_type_" else F.col("labels")[label])
     return (rows.select(value.alias("value"))
             .where(F.col("value").isNotNull())
@@ -216,12 +216,6 @@ def label_value_freqs(store: TsStore, label: str,
             .orderBy(F.col("freq").desc(), "value"))
 
 
-def _type_expr(store: TsStore, metric):
-    """Schema name for the virtual `_type_` label, as a column expression
-    (mirrors TsStore.type_name; MetadataExecSpec `_type_` in part keys)."""
-    return store.type_expr(metric)
-
-
 def series(store: TsStore, match: str, start_ms: int | None = None,
            end_ms: int | None = None, with_times: bool = False) -> DataFrame:
     """/api/v1/series (PartKeysExec): distinct label sets with data in
@@ -234,7 +228,7 @@ def series(store: TsStore, match: str, start_ms: int | None = None,
     labels = F.col("labels")
     with_type = F.map_concat(
         labels, F.create_map(F.lit("_type_"),
-                             _type_expr(store, labels["__name__"])))
+                             store.type_expr(labels["__name__"])))
     if with_times:
         with_type = F.map_concat(
             with_type,
@@ -255,7 +249,7 @@ def label_cardinality(store: TsStore, match: str | None = None) -> DataFrame:
     with_type = F.map_concat(
         F.col("labels"),
         F.create_map(F.lit("_type_"),
-                     _type_expr(store, F.col("labels")["__name__"])))
+                     store.type_expr(F.col("labels")["__name__"])))
     kv = rows.select(F.explode(with_type).alias("label", "value"))
     return (kv.groupBy("label")
             .agg(F.approx_count_distinct("value").alias("cardinality"))

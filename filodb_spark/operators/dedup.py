@@ -525,16 +525,6 @@ def lsh_verified_pairs(df: DataFrame, est_threshold: float = 0.2,
             .select("d1", "d2", "jaccard"))
 
 
-def simhash_duplicate_groups(df: DataFrame, id_col: str = "doc_id",
-                             text_col: str = "text") -> DataFrame:
-    """Docs sharing an identical 64-bit simhash (strong near-dup signal)."""
-    s = simhash(df, id_col, text_col)
-    return (s.groupBy("simhash")
-             .agg(F.sort_array(F.collect_list(id_col)).alias("doc_ids"),
-                  F.count(F.lit(1)).alias("n"))
-             .where(F.col("n") > 1))
-
-
 def winnow_near_dup_pairs(df: DataFrame, id_col: str = "doc_id",
                           text_col: str = "text", k: int = 8, w: int = 4,
                           min_shared: int = 2,

@@ -349,11 +349,3 @@ def sample_frames(df: DataFrame, every_ms: int, id_col: str = "doc_id",
 
     return df.select(F.col(id_col), F.col(content_col),
                      F.col(duration_col)).mapInPandas(sample, out_schema)
-
-
-def repartition_for_media(df: DataFrame, total_bytes: int,
-                          target_partition_bytes: int = 128 << 20) -> DataFrame:
-    """Bound Arrow batch memory: pick partition count from the data's
-    byte volume, not row count (media rows are fat)."""
-    parts = max(1, total_bytes // target_partition_bytes)
-    return df.repartition(int(parts))

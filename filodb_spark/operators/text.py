@@ -41,12 +41,6 @@ def avg_word_len(text: Column) -> Column:
     return nonspace.cast("double") / token_count(text).cast("double")
 
 
-def punct_ratio(text: Column) -> Column:
-    n = F.length(text)
-    no_punct = F.length(F.regexp_replace(text, r"[.,!?;:]", ""))
-    return (n - no_punct).cast("double") / n.cast("double")
-
-
 def quality_score(text: Column) -> Column:
     """Deterministic heuristic quality score in [0, 1]: length saturation
     x dilution by stopword-lessness (word salad scores low)."""
@@ -700,12 +694,3 @@ def bpe_encode_dict(df: DataFrame, merges: Sequence,
     return (df.select(F.col(id_col), enc(toks).alias("subwords"))
               .withColumn("n_subwords",
                           F.size("subwords").cast("long")))
-
-
-def add_text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    t = F.col(text_col)
-    return (df.withColumn("n_tokens", token_count(t))
-              .withColumn("stop_ratio", stopword_ratio(t))
-              .withColumn("avg_word_len", avg_word_len(t))
-              .withColumn("quality", quality_score(t))
-              .withColumn("fp", fingerprint(t)))

@@ -30,7 +30,7 @@ from filodb_spark.kernels import binary as bin_k
 from filodb_spark.kernels.grid import STALE_SAMPLE_AFTER_MS, StepGrid
 from filodb_spark.kernels.instant_fns import INSTANT_FUNCTIONS, instant_fn_expr
 from filodb_spark.kernels.range_fns import (TILE_RATIO, TILEABLE,
-                                            range_function)
+                                            limit_series, range_function)
 from filodb_spark.memo import Memo
 from filodb_spark.promql import ast as A
 from filodb_spark.promql.parser import parse
@@ -177,6 +177,25 @@ def _apply_label_matchers(df: DataFrame, matchers,
     for c in conds[1:]:
         cond = cond & c
     return df.where(cond)
+
+
+def _key_labels(key: str = "_sk") -> Column:
+    """The one label rule: a frame keyed by an injective sorted-entry
+    key (``_sk`` / ``_gk``, bin_k.series_key) gets its labels back as
+    ``map_from_entries(key)`` — the same map (entry order aside), so no
+    per-series label frame is joined back on the key and no first(map)
+    is carried through an aggregation (a map-typed aggregation buffer is
+    not hash-aggregable and forces SortAggregate). FiloDB keys each
+    range vector by its labels the same way (RangeVector.scala:126-144)."""
+    return F.map_from_entries(F.col(key)).alias("labels")
+
+
+def _limit_series(df: DataFrame, k: int) -> DataFrame:
+    """ApplyLimitFunction (LogicalPlan.scala:948-963): keep k series of
+    a labelled result, chosen by canonical-label order."""
+    return (df.withColumn("_lk", bin_k.canonical_labels(F.col("labels")))
+              .transform(lambda d: limit_series(d, k, ["_lk"]))
+              .drop("_lk"))
 
 
 @dataclass
@@ -359,8 +378,8 @@ class TsStore:
         """Resolve a selector to its schema table. ts_lo/ts_hi (when
         the caller knows them — _scan passes the window-extended query
         range) scope metric-less schema DISCOVERY only; the returned
-        frame is never time-filtered here (the caller's filter sits
-        above the stats observation point, _scan's docstring)."""
+        frame is never time-filtered here (_scan applies the filter,
+        below its stats observation point)."""
         schema = self.schema_of(sel.metric)
         # `_type_` is a VIRTUAL label naming the schema, not a stored
         # label: an Equals matcher gates the scan on the metric's schema
@@ -770,8 +789,7 @@ class PromQLEngine:
         # for a (selector, pruned range) is a pure function of the store,
         # and every Dataset op building it is an eager full-plan analysis
         # pass on the driver. Holds LOGICAL PLANS (DataFrames), never
-        # results; bypassed whenever a stats collector is attached (the
-        # observe_scan node must be fresh per query).
+        # results; a stats collector observes the memoized fragment.
         self._scan_memo = Memo(64)
         # per-query QueryStats hook (stats.QueryStatsCollector): when
         # set, every leaf scan is wrapped in a DataFrame.observe node
@@ -790,45 +808,31 @@ class PromQLEngine:
     def _preagg_enabled(self) -> bool:
         return getattr(self._preagg_tls, "enabled", True)
 
-    def _scan(self, sel: A.VectorSelector, ts_lo: int | None = None,
-              ts_hi: int | None = None) -> DataFrame:
-        """Leaf scan with optional stats observation — the
-        MultiSchemaPartitionsExec boundary where the reference's chunk
-        iterators count timeSeriesScanned/samplesScanned.
+    def _scan(self, sel: A.VectorSelector, ts_lo: int,
+              ts_hi: int) -> DataFrame:
+        """The one leaf path: the selector's scan pruned to
+        [ts_lo, ts_hi] with the ``_sk`` series-key column attached —
+        the MultiSchemaPartitionsExec boundary where the reference's
+        chunk iterators count timeSeriesScanned/samplesScanned.
 
-        The time-range filter is applied HERE, below the observation:
-        CollectMetrics is a pushdown barrier, so observing under the
-        filter would lose parquet ts min/max pruning and count the
-        selector's full history (the reference counts post-chunk-pruning
-        samples — ExecPlan.scala:214-226 semantics)."""
-        df = self.store.select(sel, ts_lo, ts_hi)
-        if ts_lo is not None:
-            # time-range pruning: pushed to parquet min/max skipping
-            df = df.where((F.col("ts") >= ts_lo) & (F.col("ts") <= ts_hi))
+        Memoized per (selector, pruned range) (r14 compile-path memo):
+        each Dataset-returning op is an eager analyzer pass over the
+        whole subtree, and repeated selectors are the common case in a
+        serving session. The memo holds unexecuted logical plans, never
+        results. A stats collector wraps the memoized fragment in its
+        own observe node per query; the time-range filter stays BELOW
+        that node, since CollectMetrics is a pushdown barrier (observing
+        under the filter would lose parquet ts min/max pruning and count
+        the selector's full history — the reference counts
+        post-chunk-pruning samples, ExecPlan.scala:214-226)."""
+        def build():
+            return (self.store.select(sel, ts_lo, ts_hi)
+                    .where((F.col("ts") >= ts_lo) & (F.col("ts") <= ts_hi))
+                    .withColumn("_sk", bin_k.series_key(F.col("labels"))))
+        df = self._scan_memo.get((sel, ts_lo, ts_hi), build)
         if self._stats is not None:
             df = self._stats.observe_scan(df, (sel.metric or "",))
         return df
-
-    def _scan_sk(self, sel: A.VectorSelector, ts_lo: int, ts_hi: int,
-                 what: str = "df") -> DataFrame:
-        """Memoized leaf-scan fragments (r14 compile-path memo):
-        ``what="df"`` — the pruned scan with the ``_sk`` series-key
-        column attached; ``what="lab"`` — the per-series label frame
-        (``dropDuplicates`` over ``_sk``). Each Dataset-returning op is
-        an eager analyzer pass over the whole subtree, and repeated
-        selectors are the common case in a serving session; the memo
-        holds unexecuted logical plans keyed on the frozen selector and
-        pruned range — never results. Bypassed when a stats collector
-        is attached (its CollectMetrics node must be fresh per query)."""
-        def build():
-            if what == "df":
-                return self._scan(sel, ts_lo, ts_hi) \
-                    .withColumn("_sk", bin_k.series_key(F.col("labels")))
-            return (self._scan_sk(sel, ts_lo, ts_hi)
-                    .select("_sk", "labels").dropDuplicates(["_sk"]))
-        if self._stats is not None:
-            return build()
-        return self._scan_memo.get((sel, ts_lo, ts_hi, what), build)
 
     # ---- public API (PrometheusApiRoute.scala:49,68 equivalents) -------
 
@@ -942,11 +946,7 @@ class PromQLEngine:
         if isinstance(res, Scalar):
             return self._scalar_to_vector(res, grid)
         if limit is not None:
-            # ApplyLimitFunction: cap the number of result series
-            from filodb_spark.kernels.range_fns import limit_series
-            res = (res.withColumn("_sk", bin_k.canonical_labels(F.col("labels")))
-                      .transform(lambda d: limit_series(d, limit, ["_sk"]))
-                      .drop("_sk"))
+            res = _limit_series(res, limit)
         return res
 
     def query_instant(self, promql: str, time_ms: int,
@@ -996,10 +996,7 @@ class PromQLEngine:
         else:
             out = self._run_range_fn(sel, grid, eff_window, fn, params)
         if sel.limit is not None:
-            from filodb_spark.kernels.range_fns import limit_series
-            out = (out.withColumn("_lk", bin_k.canonical_labels(F.col("labels")))
-                      .transform(lambda d: limit_series(d, sel.limit, ["_lk"]))
-                      .drop("_lk"))
+            out = _limit_series(out, sel.limit)
         return out
 
     HIST_RANGE_FNS = {"rate", "increase", "delta", "sum_over_time",
@@ -1104,8 +1101,7 @@ class PromQLEngine:
         range_function_ds), else the raw kernel over (ts=tTime,
         value=avg) pseudo-samples — the reference's DS cluster runs
         non-rewritable fns over the dataset's declared value column the
-        same way. Returns (_sk, labels, t, value) — _sk kept for
-        schema fan-out dedup."""
+        same way. Returns (_sk, t, value)."""
         from filodb_spark.streaming.downsample import (_DS_REWRITE,
                                                        range_function_ds)
         ds = self.store.ds_df
@@ -1118,16 +1114,11 @@ class PromQLEngine:
         ds = _apply_label_matchers(
             ds, [m for m in sel.matchers if m.name != "_type_"])
         ds = ds.withColumn("_sk", bin_k.series_key(labels))
-        ds_lab = ds.select("_sk", "labels").dropDuplicates(["_sk"])
         if fn in _DS_REWRITE:
-            out = range_function_ds(ds, fn, ["_sk"], grid, window)
-        else:
-            from filodb_spark.kernels.range_fns import range_function
-            out = range_function(
-                ds.select("_sk", "ts", F.col("avg").alias("value")),
-                fn, ["_sk"], grid, window, params=params)
-        return out.join(ds_lab, "_sk").select("_sk", "labels", "t",
-                                              "value")
+            return range_function_ds(ds, fn, ["_sk"], grid, window)
+        return range_function(
+            ds.select("_sk", "ts", F.col("avg").alias("value")),
+            fn, ["_sk"], grid, window, params=params)
 
     def _ds_counter_part(self, sel: A.VectorSelector, fn: str,
                          grid: StepGrid, window: int,
@@ -1135,8 +1126,7 @@ class PromQLEngine:
         """Pre-boundary steps evaluated on the downsampled COUNTER
         table with the raw kernels (the DS rows keep the raw schema).
         Also serves <m>_sum/_count/_bucket scalar rewrites from the
-        hist DS table (via ds_view's select). Returns
-        (_sk, labels, t, value)."""
+        hist DS table (via ds_view's select). Returns (_sk, t, value)."""
         dsf = self._ds_select(sel)
         if "hist" in dsf.columns:
             # a metric-less selector whose DS-side multischema probe
@@ -1147,11 +1137,8 @@ class PromQLEngine:
             dsf = (dsf.select("labels", "ts",
                               F.col("sum").alias("value"), "_sk")
                    .where(F.lit(False)))
-        ds_lab = dsf.select("_sk", "labels").dropDuplicates(["_sk"])
-        out = range_function(dsf, fn, ["_sk"], grid, window,
-                             params=params)
-        return out.join(ds_lab, "_sk").select("_sk", "labels", "t",
-                                              "value")
+        return range_function(dsf, fn, ["_sk"], grid, window,
+                              params=params)
 
     def _hist_window(self, df: DataFrame, fn: str, grid: StepGrid,
                      window: int) -> DataFrame:
@@ -1239,15 +1226,9 @@ class PromQLEngine:
                         "absent_over_time is not defined over "
                         "histograms") from None
                 raise
-            return self._absent_from(present, sel, grid)
+            return self._absent_from(present, sel.matchers, grid)
         lo, hi = grid.start - window, grid.end
-        df = self._scan_sk(sel, lo, hi)
-        # per-series label frame, built ONLY on the paths that join it
-        # back (hist / mad / DS-split raw): the common raw path carries
-        # labels through the aggregation (carry_cols), and the eager
-        # dropDuplicates Dataset was a wasted analyzer pass there (r14)
-        def lab() -> DataFrame:
-            return self._scan_sk(sel, lo, hi, "lab")
+        df = self._scan(sel, lo, hi)
         if "hist" in df.columns:
             # histogram schema: per-bucket kernels (extrapolatedRateH)
             if fn not in self.HIST_RANGE_FNS:
@@ -1260,33 +1241,25 @@ class PromQLEngine:
             # the same way)
             split = self._ds_split(grid, window) \
                 if self.store.ds_hist_df is not None else None
-            if split is not None:
+            if split is None:
+                out = self._hist_window(df, fn, grid, window)
+            else:
                 self._check_ds_lookback(fn, window)
-                dsf = self._ds_select(sel)
-                ds_lab = dsf.select("_sk", "labels") \
-                            .dropDuplicates(["_sk"])
-                ds_out = self._hist_window(dsf, fn, grid, window)
-                if split == "all_ds":
-                    keep = [c for c in ("hmin", "hmax")
-                            if c in ds_out.columns]
-                    return (ds_out.join(ds_lab, "_sk")
-                            .select("labels", "t", "hist", *keep))
-                raw_full = self._hist_window(df, fn, grid, window)
-                # min/max companions survive the stitch only when BOTH
-                # tables carry them (a min/max-less DS mount cannot
-                # answer the pre-boundary companion values)
-                keep = [c for c in ("hmin", "hmax")
-                        if c in ds_out.columns
-                        and c in raw_full.columns]
-                ds_out = (ds_out.join(ds_lab, "_sk")
-                          .select("labels", "t", "hist", *keep))
-                raw_out = (raw_full.join(lab(), "_sk")
-                           .select("labels", "t", "hist", *keep))
-                return raw_out.where(F.col("t") >= split).unionByName(
-                    ds_out.where(F.col("t") < split))
-            out = self._hist_window(df, fn, grid, window)
+                out = self._hist_window(self._ds_select(sel), fn, grid,
+                                        window)
+                if split != "all_ds":
+                    raw = self._hist_window(df, fn, grid, window)
+                    # min/max companions survive the stitch only when
+                    # BOTH tables carry them (a min/max-less DS mount
+                    # cannot answer the pre-boundary companion values)
+                    cols = ["_sk", "t", "hist",
+                            *(c for c in ("hmin", "hmax")
+                              if c in out.columns and c in raw.columns)]
+                    out = raw.where(F.col("t") >= split).select(*cols) \
+                        .unionByName(out.where(F.col("t") < split)
+                                     .select(*cols))
             keep = [c for c in ("hmin", "hmax") if c in out.columns]
-            return out.join(lab(), "_sk").select("labels", "t", "hist", *keep)
+            return out.select(_key_labels(), "t", "hist", *keep)
         # delta-counter schema toggling: rate = sum(window)/window_sec
         if sel.metric in self.store.delta_metrics:
             fn = {"rate": "rate_delta", "increase": "increase_delta"}.get(fn, fn)
@@ -1349,6 +1322,7 @@ class PromQLEngine:
             sides = ("gauge",)
         else:
             sides = ("counter",)
+        out = None
         if sides:
             parts = []
             for side in sides:
@@ -1359,64 +1333,42 @@ class PromQLEngine:
                     self._check_ds_lookback(fn, window)
                     parts.append(self._ds_counter_part(
                         sel, fn, grid, window, params))
-            ds_out = parts[0]
+            out = parts[0]
             if len(parts) == 2:
                 # schema fan-out dedup: drop counter-side series
                 # that the gauge dataset also carries
                 gauge_keys = parts[0].select("_sk").distinct()
-                ds_out = ds_out.unionByName(
+                out = out.unionByName(
                     parts[1].join(gauge_keys, "_sk", "left_anti"))
-            ds_out = ds_out.select("labels", "t", "value")
-            if split == "all_ds":
-                # long lookback: whole grid on the DS cluster
-                # (LongTimeRangePlanner.scala:123-151)
-                return ds_out
+        # split == "all_ds": long lookback, the whole grid on the DS
+        # cluster (LongTimeRangePlanner.scala:123-151) — no raw side
+        if split != "all_ds":
             if fn in ("mad_over_time", "last_over_time_is_mad_outlier"):
                 # the mad kernels take no tiling/stale-marker args
-                # (full-window medians) — same call shape as their
-                # dedicated raw-only branch below, so raw-side
-                # semantics are identical with or without a DS mount
-                raw_out = (range_function(df, fn, ["_sk"], grid,
-                                          window, params=params)
-                           .join(lab(), "_sk")
-                           .where(F.col("t") >= split)
-                           .select("labels", "t", "value"))
+                # (full-window medians)
+                raw = range_function(df, fn, ["_sk"], grid, window,
+                                     params=params)
             else:
-                # labels rebuilt from _sk (the sorted entry array —
-                # injective) instead of a first(map) carry: map-typed
-                # aggregation buffers are not hash-aggregable, so the
-                # carry forced SortAggregate + two Sorts — r14
-                raw_out = range_function(
+                # _run_range_fn is the RAW-data path: last/last_over_time
+                # (and the default instant lookback routed here) honor
+                # NaN staleness markers (LastSampleChunkedFunctionD,
+                # RangeFunction.scala:541-546); the subquery path
+                # (_eval_subquery) keeps last-non-NaN semantics
+                raw = range_function(
                     df, fn, ["_sk"], grid, window, params=params,
                     tiling=self._tiling_arg(fn, sel, grid, window),
-                    honor_stale_marker=True) \
-                    .where(F.col("t") >= split) \
-                    .withColumn("labels",
-                                F.map_from_entries(F.col("_sk"))) \
-                    .select("labels", "t", "value")
-            return raw_out.unionByName(ds_out.where(F.col("t") < split))
-        if fn in ("mad_over_time", "last_over_time_is_mad_outlier"):
-            out = range_function(df, fn, ["_sk"], grid, window, params=params)
-            return (out.join(lab(), "_sk").select("labels", "t", "value"))
-        # _run_range_fn is the RAW-data path: last/last_over_time (and the
-        # default instant lookback routed here) honor NaN staleness markers
-        # (LastSampleChunkedFunctionD, RangeFunction.scala:541-546); the
-        # subquery path (_eval_subquery) keeps last-non-NaN semantics
-        # no labels carry: rebuilt from _sk post-agg (map-typed first()
-        # buffers force SortAggregate; map_from_entries of the injective
-        # sorted-entry key is the same map) — r14
-        out = range_function(df, fn, ["_sk"], grid, window, params=params,
-                             tiling=self._tiling_arg(fn, sel, grid, window),
-                             honor_stale_marker=True)
-        return (out.withColumn("labels", F.map_from_entries(F.col("_sk")))
-                   .select("labels", "t", "value"))
+                    honor_stale_marker=True)
+            out = raw if out is None else \
+                raw.where(F.col("t") >= split).unionByName(
+                    out.where(F.col("t") < split))
+        return out.select(_key_labels(), "t", "value")
 
-    def _absent_from(self, present: DataFrame, sel: A.VectorSelector,
+    def _absent_from(self, present: DataFrame, matchers,
                      grid: StepGrid) -> DataFrame:
         """AbsentFunctionMapper (RangeVectorTransformer.scala:422-480):
         emit 1 at steps with no input series; labels from = matchers.
         The metric name is not part of absent() labels."""
-        entries = [(m.name, m.value) for m in sel.matchers if m.op == "="]
+        entries = [(m.name, m.value) for m in matchers if m.op == "="]
         lab = F.create_map(*[F.lit(x) for kv in entries for x in kv]) \
             if entries else F.create_map().cast("map<string,string>")
         present_ts = present.select("t").distinct()
@@ -1525,15 +1477,11 @@ class PromQLEngine:
             return v.withColumn("value", F.col("t") / 1000.0)
         if name == "absent":
             arg = e.args[0]
-            sel = arg if isinstance(arg, A.VectorSelector) else None
             v = self._vector(arg, grid)
-            present = v.where(~F.isnan("value")).select("t").distinct()
-            entries = [(m.name, m.value) for m in (sel.matchers if sel else ())
-                       if m.op == "="]
-            lab = F.create_map(*[F.lit(x) for kv in entries for x in kv]) \
-                if entries else F.create_map().cast("map<string,string>")
-            out = self._grid_df(grid).join(present, "t", "left_anti")
-            return out.select(lab.alias("labels"), "t", F.lit(1.0).alias("value"))
+            return self._absent_from(
+                v.where(~F.isnan("value")),
+                arg.matchers if isinstance(arg, A.VectorSelector) else (),
+                grid)
         if name == "scalar":
             inner = self._eval(e.args[0], grid)
             if isinstance(inner, Scalar):
@@ -1582,11 +1530,7 @@ class PromQLEngine:
             # limit(k, v): keep k series (LimitFunctionId,
             # ApplyLimitFunction LogicalPlan.scala:948-963)
             k = int(self._const(e.args[0]))
-            v = self._vector(e.args[1], grid)
-            from filodb_spark.kernels.range_fns import limit_series
-            return (v.withColumn("_lk", bin_k.canonical_labels(F.col("labels")))
-                     .transform(lambda d: limit_series(d, k, ["_lk"]))
-                     .drop("_lk"))
+            return _limit_series(self._vector(e.args[1], grid), k)
         if name == "histogram_bucket":
             # extract one bucket as a series (InstantFunction.scala:117)
             le = self._const(e.args[0])
@@ -1739,16 +1683,15 @@ class PromQLEngine:
             -(-(grid.start - sq.range_ms - sq.offset_ms) // sub_step) * sub_step,
             grid.end - sq.offset_ms, sub_step).aligned()
         inner = self._vector(sq.expr, inner_grid)
-        samples = inner.select("labels", F.col("t").alias("ts"), "value") \
-            .withColumn("_sk", bin_k.series_key(F.col("labels")))
+        samples = inner.select(bin_k.series_key(F.col("labels")).alias("_sk"),
+                               F.col("t").alias("ts"), "value")
         eval_grid = grid if not sq.offset_ms else \
             StepGrid(grid.start - sq.offset_ms, grid.end - sq.offset_ms, grid.step)
         out = range_function(samples, fn, ["_sk"], eval_grid, sq.range_ms,
                              params=params)
         if sq.offset_ms:
             out = out.withColumn("t", (F.col("t") + F.lit(sq.offset_ms)).cast("long"))
-        lab = samples.select("_sk", "labels").dropDuplicates(["_sk"])
-        return out.join(lab, "_sk").select("labels", "t", "value")
+        return out.select(_key_labels(), "t", "value")
 
     # dst/src label identifier rule (MiscellaneousFunction.scala:15)
     _LABEL_IDENT = r"[a-zA-Z_][a-zA-Z0-9_:\-\.]*"
@@ -1825,14 +1768,12 @@ class PromQLEngine:
         le_raw = labels["le"]
         le_num = F.when(le_raw.isin("+Inf", "Inf", "inf"),
                         F.lit(float("inf"))).otherwise(le_raw.cast("double"))
-        b = (v.withColumn("le", le_num)
-              .where(F.col("le").isNotNull())
-              .withColumn("labels", no_le)
-              .withColumn("_sk", bin_k.series_key(F.col("labels"))))
+        b = (v.select(bin_k.series_key(no_le).alias("_sk"), "t", "value",
+                      le_num.alias("le"))
+              .where(F.col("le").isNotNull()))
         per = (b.groupBy("_sk", "t")
                 .agg(F.array_sort(F.collect_list(F.struct("le", "value")))
-                     .alias("_buckets"),
-                     F.first("labels").alias("labels")))
+                     .alias("_buckets")))
         from filodb_spark.kernels.histogram import (hist_quantile,
                                                     hist_struct,
                                                     monotonic_values)
@@ -1843,7 +1784,8 @@ class PromQLEngine:
         h = hist_struct(
             F.transform("_buckets", lambda p: p["le"]),
             monotonic_values(F.transform("_buckets", lambda p: p["value"])))
-        return per.select("labels", "t", hist_quantile(q, h).alias("value"))
+        return per.select(_key_labels(), "t",
+                          hist_quantile(q, h).alias("value"))
 
     # ---- aggregation ----------------------------------------------------
 
@@ -2021,6 +1963,13 @@ class PromQLEngine:
             # LogicalPlanParserSpec): treat as one anonymous series
             v = self._scalar_to_vector(v, grid)
         labels = F.col("labels")
+        if e.by is not None:
+            new_labels = F.map_filter(labels, lambda k, _: k.isin([*e.by]))
+        elif e.without is not None:
+            drop = [*e.without, METRIC]
+            new_labels = F.map_filter(labels, lambda k, _: ~k.isin(drop))
+        else:
+            new_labels = F.create_map().cast("map<string,string>")
         if "hist" in v.columns:
             # bucket-wise histogram sum (HistSumRowAggregator.scala:1-34)
             if e.op != "sum":
@@ -2033,27 +1982,10 @@ class PromQLEngine:
             # reference's schema discovery) and, if heterogeneous, sum
             # onto the reference's merged scheme
             target = self._exp_merge_target(e.expr)
-            if e.by is not None:
-                nl = F.map_filter(labels, lambda k, _: k.isin([*e.by]))
-            elif e.without is not None:
-                drop = [*e.without, METRIC]
-                nl = F.map_filter(labels, lambda k, _: ~k.isin(drop))
-            else:
-                nl = F.create_map().cast("map<string,string>")
-            v = v.withColumns({"labels": nl,
-                               "_gk": bin_k.series_key(nl)})
+            v = v.withColumn("_gk", bin_k.series_key(new_labels))
             out = hist_sum(v, ["_gk", "t"], target_les=target)
-            lab = v.select("_gk", "labels").dropDuplicates(["_gk"])
             return self._enforce_groupby_limit(
-                v, out.join(lab, "_gk").select("labels", "t", "hist"),
-                "hist")
-        if e.by is not None:
-            new_labels = F.map_filter(labels, lambda k, _: k.isin([*e.by]))
-        elif e.without is not None:
-            drop = [*e.without, METRIC]
-            new_labels = F.map_filter(labels, lambda k, _: ~k.isin(drop))
-        else:
-            new_labels = F.create_map().cast("map<string,string>")
+                v, out.select(_key_labels("_gk"), "t", "hist"), "hist")
         if e.op in ("topk", "bottomk"):
             # members keep their ORIGINAL labels (TopBottomKRowAggregator
             # presents series); by/without only buckets the ranking
@@ -2077,25 +2009,15 @@ class PromQLEngine:
                 F.map_filter(F.col("labels"), lambda k_, _: k_ != dst),
                 F.create_map(F.lit(dst), vstr)))
             v2 = v2.withColumn("_gk", bin_k.series_key(F.col("labels")))
-            # labels rebuilt from the grouping key, not carried with
-            # first(map): a map-typed aggregation buffer is not
-            # hash-aggregable, so the carry forced SortAggregate (two
-            # extra Sorts around the exchange). _gk IS the sorted entry
-            # array of labels (series_key is injective), so
-            # map_from_entries(_gk) is the same map — r14.
             out = (v2.where(~F.isnan("value"))
                      .groupBy("_gk", "t")
-                     .agg(F.count(F.lit(1)).cast("double").alias("value"))
-                     .withColumn("labels", F.map_from_entries(F.col("_gk"))))
+                     .agg(F.count(F.lit(1)).cast("double").alias("value")))
             return self._enforce_groupby_limit(
-                v2, out.select("labels", "t", "value"))
+                v2, out.select(_key_labels("_gk"), "t", "value"))
         params = (self._const(e.param),) if e.param is not None else ()
-        # no labels carry: rebuilt from _gk post-agg (see count_values
-        # note above — keeps the aggregate hash-aggregable)
-        out = agg_k.aggregate(v, e.op, ["_gk"], params=params) \
-                   .withColumn("labels", F.map_from_entries(F.col("_gk")))
+        out = agg_k.aggregate(v, e.op, ["_gk"], params=params)
         return self._enforce_groupby_limit(
-            v, out.select("labels", "t", "value"))
+            v, out.select(_key_labels("_gk"), "t", "value"))
 
     # ---- binary ---------------------------------------------------------
 

@@ -61,21 +61,3 @@ def get_spark(app_name: str = "filodb-spark", master: str | None = None,
         .config("spark.ui.enabled", "false")
     )
     return builder.getOrCreate()
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] | None = None):
-    """Register the driver fixture parquet tables as temp views.
-
-    Returns a dict name -> DataFrame. Views let both the DataFrame API and
-    spark.sql() paths address the same tables.
-    """
-    names = names or ("region", "nation", "customer", "supplier", "part",
-                      "orders", "lineitem", "events", "documents", "embeddings")
-    out = {}
-    for n in names:
-        path = os.path.join(sf_dir, f"{n}.parquet")
-        if os.path.exists(path):
-            df = spark.read.parquet(path)
-            df.createOrReplaceTempView(n)
-            out[n] = df
-    return out

@@ -1,6 +1,6 @@
 """Capture the plans/r14 artifacts for this round's three code changes.
 
-1. Scan memo (compiler._scan_sk, commit 2cd00ae) — claimed PLAN-NEUTRAL:
+1. Scan memo (PromQLEngine._scan, commit 2cd00ae) — claimed PLAN-NEUTRAL:
    the memo returns the same logical plan the un-memoized path builds.
    Evidence: prom_raw / prom_sum_rate explained on a fresh engine's
    first build (*_memo_off: a cold memo misses, so the fragment is

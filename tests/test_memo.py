@@ -91,7 +91,7 @@ def test_build_race_first_insert_wins_and_loser_is_not_evicted():
 
 
 def test_reentrant_builder_does_not_deadlock():
-    # the _scan_sk("lab") shape: a builder that reads the same memo
+    # a builder that reads the same memo for another key
     memo = Memo(MAXSIZE)
     out = []
 

@@ -27,6 +27,18 @@ def eng(spark):
     return e, lo, hi, df
 
 
+def _hist_rows(spark):
+    """Two histogram series (ns a, b), five samples each, 1 s apart."""
+    rows = [({"__name__": "lat", "ns": ns}, 1000 + i * 1000,
+             float(i), 3.0,
+             ([1.0, 2.0, float("inf")], [1.0, 3.0, 5.0 + i]))
+            for ns in ("a", "b") for i in range(5)]
+    return spark.createDataFrame(
+        rows, "labels map<string,string>, ts long, sum double, "
+              "count double, "
+              "hist struct<les: array<double>, values: array<double>>")
+
+
 class TestQueryStats:
     def test_stats_off_response_unchanged(self, eng):
         e, lo, hi, _ = eng
@@ -98,6 +110,10 @@ class TestQueryStats:
         ('sum(count_over_time(click{user!="0"}[24h]))',
          lambda l: l["__name__"] == "click" and l["user"] != "0"),
         ('sum(count_over_time({missing="x"}[24h]))', lambda l: False),
+        # a leaf whose labels are rebuilt after a non-tiled kernel
+        # (median windows) is observed once, not once per label frame
+        ('sum(mad_over_time(purchase[24h]))',
+         lambda l: l["__name__"] == "purchase"),
     ])
     def test_samples_scanned_matches_selector_count(self, eng, promql,
                                                     selector_pred):
@@ -111,6 +127,22 @@ class TestQueryStats:
                        if selector_pred(dict(r["labels"])))
         got = sum(s["samplesScanned"] for s in resp["queryStats"])
         assert got == expected
+
+    def test_hist_range_fn_samples_scanned_matches_row_count(self, spark):
+        """A histogram-schema leaf counts each hist row once: the
+        per-bucket kernel output gets its labels from the series key,
+        not from a second (also observed) scan of the same leaf."""
+        hdf = _hist_rows(spark)
+        store = TsStore(df=hdf.select("labels", "ts",
+                                      F.col("sum").alias("value")),
+                        hist_df=hdf, hist_metrics=("lat",))
+        e = PromQLEngine(spark, store, lookback_ms=3600_000)
+        resp = query_range_api(e, "rate(lat[10s])", 3, 5, 1, stats=True)
+        assert resp["data"]["result"]
+        [st] = resp["queryStats"]
+        assert st["group"] == ["lat"]
+        assert st["samplesScanned"] == hdf.count()
+        assert st["timeSeriesScanned"] == 2
 
     def test_scalar_only_query_has_no_groups(self, eng):
         e, lo, hi, _ = eng

@@ -1,10 +1,10 @@
-"""r14 compile-path memo: the engine memoizes leaf-scan fragments
-(pruned scan + _sk key, and the per-series label frame) per (selector,
-range). The memo holds logical plans, never results; it must be
-bypassed whenever a stats collector is attached (its CollectMetrics
-node has to be fresh per query) and results must be identical from a
-cold memo, a warm one, one that evicts, and across repeated and
-concurrent queries."""
+"""r14 compile-path memo: the engine memoizes the leaf-scan fragment
+(pruned scan + _sk series key) per (selector, range). The memo holds
+logical plans, never results; a stats collector wraps the memoized
+fragment in its own CollectMetrics node per query, and results must be
+identical from a cold memo, a warm one, one that evicts, and across
+repeated and concurrent queries. Every path rebuilds labels from the
+series key, so no path builds a second per-series label frame."""
 
 import threading
 
@@ -28,6 +28,27 @@ def eng(spark):
     return e, lo, hi
 
 
+@pytest.fixture(scope="module")
+def hist_eng(spark):
+    """Two histogram series (ns a, b), five samples each, 1 s apart."""
+    rows = [({"__name__": "lat", "ns": ns}, 1000 + i * 1000, float(i), 3.0,
+             ([1.0, 2.0, float("inf")], [1.0, 3.0 + i, 5.0 + 2 * i]))
+            for ns in ("a", "b") for i in range(5)]
+    hdf = spark.createDataFrame(
+        rows, "labels map<string,string>, ts long, sum double, "
+              "count double, "
+              "hist struct<les: array<double>, values: array<double>>")
+    store = TsStore(df=hdf.select("labels", "ts",
+                                  F.col("sum").alias("value")),
+                    hist_df=hdf, hist_metrics=("lat",))
+    return PromQLEngine(spark, store, lookback_ms=3600_000)
+
+
+def _label_sets(df):
+    return {tuple(sorted(r["labels"].items()))
+            for r in df.select("labels").collect()}
+
+
 def _rows(df):
     # repr() maps NaN to a comparable token (NaN != NaN under ==)
     return sorted((tuple(sorted(r["labels"].items())), r["t"],
@@ -47,18 +68,25 @@ class TestScanMemo:
         cold = _rows(e.query_range(q, lo, hi, 6 * 3600 * 1000))
         assert first == again == cold
 
-    def test_stats_collector_bypasses_memo(self, eng):
+    def test_stats_collector_observes_memoized_fragment(self, eng):
         e, lo, hi = eng
         e._scan_memo = Memo(64)
         q = 'sum(rate(purchase[24h]))'
-        _rows(e.query_range(q, lo, hi, 6 * 3600 * 1000))  # populate memo
+        step = 6 * 3600 * 1000
+        # a stats run builds the fragment through the memo ...
+        e.query_range(q, lo, hi, step, stats_collector=QueryStatsCollector())
+        assert len(e._scan_memo), "stats run should fill the memo"
+        e._scan_memo = Memo(64)
+        plain = _rows(e.query_range(q, lo, hi, step))
+        n_entries = len(e._scan_memo)
         col = QueryStatsCollector()
-        out = e.query_range(q, lo, hi, 6 * 3600 * 1000, stats_collector=col)
-        out.count()
+        out = e.query_range(q, lo, hi, step, stats_collector=col)
+        assert _rows(out) == plain
+        # ... and one after a plain run reads it: no new entry
+        assert len(e._scan_memo) == n_entries
         # the observed scan really ran: per-leaf sample counts are present
         assert sum(g["samplesScanned"] for g in col.groups()) > 0
-        # and the memoized (unobserved) fragment was NOT reused for it:
-        # the observed plan must carry a CollectMetrics node
+        # and its plan carries its own observe node over that fragment
         plan = out._jdf.queryExecution().analyzed().toString()
         assert "CollectMetrics" in plan
 
@@ -112,16 +140,24 @@ class TestHashAggregableLabels:
         return df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted")
 
-    def test_raw_and_agg_paths_hash_aggregate(self, eng):
+    def test_raw_and_agg_paths_hash_aggregate(self, eng, hist_eng):
         e, lo, hi = eng
         step = 6 * 3600 * 1000
         for q in ('purchase', 'sum(rate(purchase[24h]))',
                   'count_values("v", purchase)',
-                  'quantile(0.5, purchase)'):
+                  'quantile(0.5, purchase)',
+                  'max_over_time(rate(purchase[24h])[2d:6h])'):
             plan = self._plan(e.query_range(q, lo, hi, step))
             assert "SortAggregate" not in plan, (q, plan)
+        # histogram_quantile over `_bucket` series (one series per le):
+        # collect_list already makes the bucket aggregate an
+        # ObjectHashAggregate, so pin that no labels map rides it
+        q = 'histogram_quantile(0.5, rate(lat_bucket[10s]))'
+        plan = self._plan(hist_eng.query_range(q, 3000, 5000, 1000))
+        assert "SortAggregate" not in plan, (q, plan)
+        assert "first(labels" not in plan, (q, plan)
 
-    def test_rebuilt_labels_equal_source_labels(self, eng):
+    def test_rebuilt_labels_equal_source_labels(self, eng, hist_eng):
         # content equality: the reconstructed map must carry exactly
         # the source series' labels (entry ORDER may differ — maps are
         # unordered; everything downstream sorts or looks up by key)
@@ -139,3 +175,18 @@ class TestHashAggregableLabels:
         out2 = e.query_range('sum by (user) (purchase)', lo, hi, step)
         ks = {tuple(sorted(r["labels"].keys())) for r in out2.collect()}
         assert ks == {("user",)}
+        # the mad and subquery paths rebuild labels the same way
+        for q in ('mad_over_time(purchase[24h])',
+                  'max_over_time(rate(purchase[24h])[2d:6h])'):
+            out = e.query_range(q, lo, hi, step)
+            assert _label_sets(out) == exp, q
+        # and so do the histogram paths
+        src = _label_sets(hist_eng.store.hist_df)
+        out = hist_eng.query_range('rate(lat[10s])', 3000, 5000, 1000)
+        assert "hist" in out.columns
+        assert _label_sets(out) == src
+        # `_bucket` series carry `le`; the quantile drops it again
+        out = hist_eng.query_range(
+            'histogram_quantile(0.5, rate(lat_bucket[10s]))',
+            3000, 5000, 1000)
+        assert _label_sets(out) == src
