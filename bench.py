@@ -123,6 +123,7 @@ def prom_shape_bench(spark, timings, spreads):
         timed_median(lambda: eng.query_range(q, start, end, 150_000).count(),
                      timings, spreads, name)
     df.unpersist()
+    eng.store.df.unpersist()   # the store's series-laid-out copy
 
     # QueryHiCardInMemoryBenchmark shape (jmh/...:40-47): 8000 series
     # (1/4 queried), 15min @10s, raw leaf scan
@@ -143,6 +144,7 @@ def prom_shape_bench(spark, timings, spreads):
         t0_ms + 90 * 10_000, 60_000).count(),
         timings, spreads, "prom_hicard_scan")
     hc.unpersist()
+    eng2.store.df.unpersist()
 
 
 def main():

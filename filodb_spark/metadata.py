@@ -22,9 +22,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from filodb_spark.kernels.binary import canonical_labels
+from filodb_spark.kernels.binary import canonical_labels, series_key
 from filodb_spark.promql.ast import VectorSelector
-from filodb_spark.promql.compiler import TsStore
+from filodb_spark.promql.compiler import TsStore, _key_labels
 from filodb_spark.promql.parser import parse
 
 
@@ -126,13 +126,16 @@ def _scan(store: TsStore, match: str | None, start_ms: int | None,
 
 def _series_rows(store: TsStore, match: str | None, start_ms: int | None,
                  end_ms: int | None) -> DataFrame:
-    """One row per series in range: (labels, _sk, first_ts, last_ts).
+    """One row per series in range: (labels, first_ts, last_ts).
 
     Part-key path: matcher-filtered index rows with the reference's
     span-overlap range filter (a series is in range when
     [first_ts, last_ts] overlaps [start, end] —
     PartKeyLuceneIndex.scala:418-447 startTime/endTime postings).
-    Fallback: aggregate the pruned sample scan per canonical key."""
+    Fallback: aggregate the pruned sample scan per series key
+    (binary.series_key, the expression a cached TsStore is partitioned
+    by, so the aggregation needs no Exchange there) and rebuild the
+    labels from the key (compiler._key_labels)."""
     sel = _selector(match)
     pk = store.select_partkeys(sel)
     if pk is not None and _range_needs_ds(store, start_ms) \
@@ -147,14 +150,11 @@ def _series_rows(store: TsStore, match: str | None, start_ms: int | None,
             pk = pk.where(F.col("last_ts") >= start_ms)
         if end_ms is not None:
             pk = pk.where(F.col("first_ts") <= end_ms)
-        return pk.select("labels", "_sk", "first_ts", "last_ts")
+        return pk.select("labels", "first_ts", "last_ts")
     df = _scan(store, match, start_ms, end_ms)
-    return (df.withColumn("_sk", canonical_labels(F.col("labels")))
-            .groupBy("_sk")
-            .agg(F.first("labels").alias("labels"),
-                 F.min("ts").alias("first_ts"),
-                 F.max("ts").alias("last_ts"))
-            .select("labels", "_sk", "first_ts", "last_ts"))
+    return (df.groupBy(series_key(F.col("labels")).alias("_sk"))
+            .agg(F.min("ts").alias("first_ts"), F.max("ts").alias("last_ts"))
+            .select(_key_labels(), "first_ts", "last_ts"))
 
 
 def label_names(store: TsStore, match: str | None = None,

@@ -19,6 +19,7 @@ per distinct labels value (RangeVector.scala:126-144).
 from __future__ import annotations
 
 import threading
+import weakref
 from dataclasses import dataclass
 from functools import cached_property
 
@@ -198,6 +199,47 @@ def _limit_series(df: DataFrame, k: int) -> DataFrame:
               .drop("_lk"))
 
 
+# Frames _series_layout produced. A dataclasses.replace copy (ds_view)
+# or TsStore(store.df) hands one back to __post_init__, which must not
+# shuffle or materialize it a second time.
+_LAID_OUT = weakref.WeakSet()
+
+
+def _series_layout(frame: DataFrame) -> DataFrame:
+    """Lay an in-memory sample frame out by series, once: hash-partition
+    it on the series key (bin_k.series_key(labels)) into as many
+    partitions as it had, cache the result at the input's storage level,
+    materialize it, then release the input's cache. The FiloDB shard
+    analog: a shard is a hash bucket of series and a series never
+    straddles shards (TimeSeriesShard.scala:268, ShardMapper.scala:
+    122-130).
+
+    _scan aliases the same expression as ``_sk``, so Spark's
+    alias-aware output partitioning reports the cached layout as
+    HashPartitioning(_sk) and every ``_sk``-keyed kernel groups
+    straight from the cache; only cross-series aggregation shuffles.
+    No key column is stored: it would double the cache. Materializing
+    before the input is released matters twice over: Spark recompiles
+    a dependent cache that is not fully loaded when its source is
+    uncached, and a recomputed shuffle reorders rows inside partitions,
+    which moves the last bits of cross-series sums between answers.
+
+    Uncached (or disk-only) frames, parquet scans included, are
+    returned as they are."""
+    if frame in _LAID_OUT:
+        return frame
+    level = frame.storageLevel
+    if not level.useMemory:
+        return frame
+    laid = frame.repartition(max(1, frame.rdd.getNumPartitions()),
+                             bin_k.series_key(F.col("labels")))
+    laid.persist(level)
+    laid.count()
+    frame.unpersist()
+    _LAID_OUT.add(laid)
+    return laid
+
+
 @dataclass
 class TsStore:
     """Metric table provider — the multi-schema registry
@@ -213,6 +255,14 @@ class TsStore:
     At scale each schema is a parquet/Delta table partitioned by
     (_ws_, _ns_, date) — selector filters push down to partition
     pruning + row-group skipping.
+
+    In-memory layout: a sample frame (df, hist_df, ds_df, ds_counter_df,
+    ds_hist_df) that arrives cached in memory is re-laid out by series
+    once, at construction (_series_layout). The store takes over the
+    input's cache: the field holds the laid-out copy, cached at the
+    input's storage level, and the input is unpersisted. Schema and
+    columns are unchanged, and there is still one cached copy. Uncached
+    and parquet-backed frames are used as given.
     """
 
     df: DataFrame
@@ -327,6 +377,12 @@ class TsStore:
     # results for retired series (metadata._series_rows falls back to
     # the scan otherwise; None = unknown, treated as not covering)
     partkey_covers_ds: bool | None = None
+
+    def __post_init__(self):
+        for name in ("df", "hist_df", "ds_df", "ds_counter_df", "ds_hist_df"):
+            frame = getattr(self, name)
+            if frame is not None:
+                setattr(self, name, _series_layout(frame))
 
     def schema_of(self, metric: str | None) -> str:
         if metric and metric in self.hist_metrics:
@@ -813,7 +869,10 @@ class PromQLEngine:
         """The one leaf path: the selector's scan pruned to
         [ts_lo, ts_hi] with the ``_sk`` series-key column attached —
         the MultiSchemaPartitionsExec boundary where the reference's
-        chunk iterators count timeSeriesScanned/samplesScanned.
+        chunk iterators count timeSeriesScanned/samplesScanned. ``_sk``
+        must stay the alias of the expression _series_layout partitions
+        a cached store by: that is what makes the layout satisfy
+        ``_sk``-keyed kernels without an Exchange.
 
         Memoized per (selector, pruned range) (r14 compile-path memo):
         each Dataset-returning op is an eager analyzer pass over the

@@ -188,8 +188,9 @@ def profile_prom(spark, args, out_dir):
         spread = round(max(counts) - min(counts), 3)
         print(f"{name} {round(build, 3)} {med} {spread} {nrows}")
         print(f"    {plan_summary(plan)}")
-    df.unpersist()
-    hc.unpersist()
+    # the stores took over the inputs' caches (series layout)
+    eng.store.df.unpersist()
+    eng2.store.df.unpersist()
 
 
 if __name__ == "__main__":

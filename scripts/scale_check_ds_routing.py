@@ -101,9 +101,10 @@ def main():
         recent = time.monotonic() - t0
         print(f"{mult:>8}x {n:>9} {first_q:>9.2f} {routed:>9.2f} "
               f"{recent:>9.2f} {ds_rows:>9}")
-        ds.unpersist()
-        dsc.unpersist()
-        raw.unpersist()
+        # the store took over the inputs' caches (series layout)
+        store.df.unpersist()
+        store.ds_df.unpersist()
+        store.ds_counter_df.unpersist()
 
 
 if __name__ == "__main__":

@@ -10,7 +10,9 @@ them FIFO across the pool — the analog of concurrent queries landing
 on one query-service node).
 
 Usage: python scripts/stress_http.py [sf_dir] [users] [secs]
-Prints one JSON line: per-query-shape p50/p90/p99 (ms) + total qps.
+Prints one JSON line: per-query-shape p50/p90/p99 (ms) + total qps, and
+`mismatches`: concurrent answers whose result differs from the serial
+warm-pass answer of the same shape (exact, value strings included).
 """
 
 from __future__ import annotations
@@ -24,6 +26,12 @@ import urllib.parse
 import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+
+def _result(body: dict) -> list:
+    """A response's series in a canonical order."""
+    return sorted((sorted(r["metric"].items()), r["values"])
+                  for r in body["data"]["result"])
 
 
 def main() -> None:
@@ -58,7 +66,9 @@ def main() -> None:
     common = {"start": lo / 1000, "end": hi / 1000, "step": step}
 
     lat: dict[str, list] = {k: [] for k in queries}
+    refs: dict[str, list] = {}                # serial warm-pass answers
     errors = [0]
+    mismatches = [0]
     deadline = [0.0]          # set after the warm pass
     lock = threading.Lock()
 
@@ -81,6 +91,7 @@ def main() -> None:
             with lock:
                 if ok:
                     lat[name].append(dt)
+                    mismatches[0] += _result(body) != refs.get(name)
                 else:
                     errors[0] += 1
 
@@ -90,9 +101,10 @@ def main() -> None:
     for name in queries:
         params = dict(common, query=queries[name])
         try:
-            urllib.request.urlopen(
-                base + "?" + urllib.parse.urlencode(params),
-                timeout=300).read()
+            with urllib.request.urlopen(
+                    base + "?" + urllib.parse.urlencode(params),
+                    timeout=300) as r:
+                refs[name] = _result(json.load(r))
         except Exception as e:
             print(f"# warmup {name} failed: {e}", file=sys.stderr)
 
@@ -116,6 +128,7 @@ def main() -> None:
     out = {
         "users": users, "secs": round(wall, 1), "sf_dir": sf_dir,
         "total_requests": total, "errors": errors[0],
+        "mismatches": mismatches[0],
         "qps": round(total / wall, 2),
         "latency_ms": {k: {"n": len(v), "p50": pct(v, 0.5),
                            "p90": pct(v, 0.9), "p99": pct(v, 0.99)}

@@ -265,8 +265,6 @@ def test_weird_wrong_column_cases_not_optimized(spark):
 
 
 @pytest.mark.slow
-
-
 def test_join_one_side_optimizable_diverges_from_reference(spark):
     """DIVERGENCE TEST for the one deliberate planner deviation: the
     reference optimizes a BinaryJoin ONLY when BOTH sides are

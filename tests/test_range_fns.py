@@ -287,7 +287,6 @@ class TestPrevAttachedAndExprReuse:
         return sorted(out, key=repr)
 
     @pytest.mark.slow
-
     def test_prev_attached_equals_default_all_paths(self, spark):
         from filodb_spark.kernels.grid import with_prev_sample
         df = make_ts_df(spark, {"a": COUNTER_SAMPLES, "b": GAUGE_SAMPLES})
