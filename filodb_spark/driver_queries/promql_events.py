@@ -179,7 +179,7 @@ def q_agg_sum_rate(spark, sf_dir):
     ev, grid = _series(spark, sf_dir)
     r = range_function(ev, "rate", ["event_type"], grid, WINDOW,
                        prev_attached=True)
-    out = aggregate(_no_nan(r), "sum", [], t_col="t")
+    out = aggregate(_no_nan(r), "sum", [])
     # round 6 (not 9): the cross-series sum's addition order differs across
     # engines; 1e-15 noise must sit far from the rounding boundary
     return _rounded(_no_nan(out), 6, ["t"])
@@ -191,7 +191,7 @@ def q_agg_avg_by(spark, sf_dir):
     ev = ev.withColumn("ub", F.col("user_id") % 10)
     ev = ev.groupBy("event_type", "ub", "ts").agg(F.max("value").alias("value"))
     s = range_function(ev, "sum_over_time", ["event_type", "ub"], grid, WINDOW)
-    out = aggregate(_no_nan(s), "avg", ["event_type"], t_col="t")
+    out = aggregate(_no_nan(s), "avg", ["event_type"])
     return _rounded(_no_nan(out), 6, ["event_type", "t"])
 
 
@@ -212,7 +212,7 @@ def q_agg_bottomk(spark, sf_dir):
 def q_agg_quantile(spark, sf_dir):
     ev, grid = _series(spark, sf_dir)
     last = range_function(ev, "last_over_time", ["event_type"], grid, WINDOW)
-    out = aggregate(_no_nan(last), "quantile", [], t_col="t", params=(0.5,))
+    out = aggregate(_no_nan(last), "quantile", [], params=(0.5,))
     return _rounded(_no_nan(out), 6, ["t"])
 
 
@@ -220,7 +220,7 @@ def q_agg_count_values(spark, sf_dir):
     ev, grid = _series(spark, sf_dir)
     last = range_function(ev, "last_over_time", ["event_type"], grid, WINDOW)
     last = last.withColumn("value", F.floor(F.col("value")).cast("double"))
-    out = count_values(last, [], "bucket", t_col="t")
+    out = count_values(last, [], "bucket")
     return out.select(F.col("bucket").cast("long").alias("bucket"), "t", "value")
 
 

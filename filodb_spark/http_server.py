@@ -77,6 +77,10 @@ def _sec_ms(v: str | None) -> int | None:
     return None if v is None else int(float(v) * 1000)
 
 
+def _success(data) -> dict:
+    return {"status": "success", "data": data}
+
+
 def _parse_timeout(q: dict) -> float | None:
     """Prometheus `timeout=` request parameter: seconds, or a duration
     like 30s/1m."""
@@ -303,7 +307,6 @@ def make_handler(engine, write_buffer=None, bearer_token=None,
                             engine, q["query"], start, end, step,
                             stats=want_stats, limits=warn_limits,
                             histogram_map=hist_map)
-                    resp = run_with_timeout(engine.spark, work, timeout_s)
                 elif path.endswith("/api/v1/query"):
                     t = float(q["time"])
 
@@ -314,84 +317,84 @@ def make_handler(engine, write_buffer=None, bearer_token=None,
                         return render.query_api(
                             engine, q["query"], t, stats=want_stats,
                             limits=warn_limits, histogram_map=hist_map)
-                    resp = run_with_timeout(engine.spark, work, timeout_s)
                 elif path.endswith("/api/v1/labels"):
                     # start/end (epoch sec) bound the series span like the
                     # reference route (PrometheusApiRoute.scala:85-98);
                     # absent means unbounded (full retention)
-                    resp = {"status": "success",
-                            "data": [r["label"] for r in
-                                     md.label_names(
-                                         engine.store, q.get("match[]"),
-                                         _sec_ms(q.get("start")),
-                                         _sec_ms(q.get("end"))).collect()]}
+                    def work():
+                        return _success([r["label"] for r in md.label_names(
+                            engine.store, q.get("match[]"),
+                            _sec_ms(q.get("start")),
+                            _sec_ms(q.get("end"))).collect()])
                 elif "/api/v1/label/" in path and path.endswith("/values"):
                     label = path.split("/api/v1/label/")[1].rsplit("/", 1)[0]
-                    resp = {"status": "success",
-                            "data": [r["value"] for r in
-                                     md.label_values(
-                                         engine.store, label,
-                                         q.get("match[]"),
-                                         _sec_ms(q.get("start")),
-                                         _sec_ms(q.get("end"))).collect()]}
+
+                    def work():
+                        return _success([r["value"] for r in md.label_values(
+                            engine.store, label, q.get("match[]"),
+                            _sec_ms(q.get("start")),
+                            _sec_ms(q.get("end"))).collect()])
                 elif path.endswith("/api/v1/series"):
-                    resp = {"status": "success",
-                            "data": [dict(r["labels"]) for r in
-                                     md.series(
-                                         engine.store, q["match[]"],
-                                         _sec_ms(q.get("start")),
-                                         _sec_ms(q.get("end")),
-                                         with_times=q.get("withTimes", "")
-                                         in ("true", "1")).collect()]}
+                    def work():
+                        return _success([dict(r["labels"]) for r in md.series(
+                            engine.store, q["match[]"],
+                            _sec_ms(q.get("start")), _sec_ms(q.get("end")),
+                            with_times=q.get("withTimes", "")
+                            in ("true", "1")).collect()])
                 elif path.endswith("/api/v1/status/label_cardinality"):
                     # reference exposes cardinality via its HTTP surface
                     # (MetadataExecPlan LabelCardinalityExec); same HLL
                     # sketch class here (approx_count_distinct)
-                    resp = {"status": "success",
-                            "data": [{"label": r["label"],
-                                      "cardinality": r["cardinality"]}
-                                     for r in md.label_cardinality(
-                                         engine.store,
-                                         q.get("match[]")).collect()]}
+                    def work():
+                        return _success([
+                            {"label": r["label"],
+                             "cardinality": r["cardinality"]}
+                            for r in md.label_cardinality(
+                                engine.store, q.get("match[]")).collect()])
                 elif path.endswith("/api/v1/status/ts_cardinality"):
-                    active = q.get("active_after")
-                    active = int(active) if active else None
-                    if q.get("num_group_by") or q.get("shard_key_prefix"):
-                        # TsCardinalities v2 surface (LogicalPlan.scala:343
-                        # shardKeyPrefix + numGroupByFields)
-                        prefix = tuple(p for p in
-                                       (q.get("shard_key_prefix") or "")
-                                       .split(",") if p)
-                        rows = md.ts_cardinality_prefix(
-                            engine.store, prefix,
-                            int(q.get("num_group_by") or len(prefix) or 1),
-                            active).collect()
-                    else:
-                        group = tuple((q.get("group_by") or "__name__")
-                                      .split(","))
-                        k = q.get("top_k")
-                        if k is not None:
-                            rows = md.topk_cardinality(
-                                engine.store, group, int(k), active,
-                                overflow=q.get("overflow", "")
-                                in ("true", "1")).collect()
+                    def work():
+                        active = q.get("active_after")
+                        active = int(active) if active else None
+                        if q.get("num_group_by") or q.get("shard_key_prefix"):
+                            # TsCardinalities v2 surface
+                            # (LogicalPlan.scala:343 shardKeyPrefix +
+                            # numGroupByFields)
+                            prefix = tuple(p for p in
+                                           (q.get("shard_key_prefix") or "")
+                                           .split(",") if p)
+                            rows = md.ts_cardinality_prefix(
+                                engine.store, prefix,
+                                int(q.get("num_group_by") or len(prefix)
+                                    or 1), active)
                         else:
-                            rows = md.ts_cardinality(
-                                engine.store, group, active).collect()
-                    resp = {"status": "success",
-                            "data": [r.asDict() for r in rows]}
+                            group = tuple((q.get("group_by") or "__name__")
+                                          .split(","))
+                            k = q.get("top_k")
+                            if k is not None:
+                                rows = md.topk_cardinality(
+                                    engine.store, group, int(k), active,
+                                    overflow=q.get("overflow", "")
+                                    in ("true", "1"))
+                            else:
+                                rows = md.ts_cardinality(
+                                    engine.store, group, active)
+                        return _success([r.asDict() for r in rows.collect()])
                 elif path.endswith("/api/v1/status/buildinfo"):
                     # Grafana probes this on datasource setup; report a
                     # Prometheus-compatible shape (PrometheusApiRoute
                     # exposes the same for the reference)
                     import pyspark
-                    resp = {"status": "success", "data": {
+                    return self._send(_success({
                         "version": "2.48.0",   # dialect level spoken
                         "application": "filodb-spark",
                         "features": {},
-                        "sparkVersion": pyspark.__version__}}
+                        "sparkVersion": pyspark.__version__}))
                 else:
                     return self._error(f"unknown endpoint {url.path}", 404)
+                # one request path: every route's Spark work runs in the
+                # request's job group and scheduler pool, under its
+                # deadline
+                resp = run_with_timeout(engine.spark, work, timeout_s)
                 self._send(resp)
             except QueryLimitException as ex:
                 # plan-estimated limit breach: 413 like the reference's

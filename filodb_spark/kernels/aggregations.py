@@ -45,17 +45,16 @@ def _finish(c: Column) -> Column:
 
 
 def aggregate(df: DataFrame, op: str, group_cols: Sequence[str],
-              t_col: str = "t", value_col: str = "value",
-              params: tuple = (), carry_cols: Sequence[str] = ()) -> DataFrame:
-    """PromQL aggregation over series, per timestep.
+              params: tuple = ()) -> DataFrame:
+    """PromQL aggregation over series, per timestep `t` of `value`.
 
     `group_cols` are the `by (...)` label columns (empty = aggregate all
-    series). Output: group_cols + carry_cols + [t, value] except for
-    topk/bottomk / count_values which keep/extend series identity.
-    `carry_cols` are group-constant columns carried with first().
+    series). Output: group_cols + [t, value] (topk/bottomk and
+    count_values, which keep/extend series identity, are their own
+    functions).
     """
-    v = F.col(value_col)
-    keys = [*group_cols, t_col]
+    v = F.col("value")
+    keys = [*group_cols, "t"]
 
     # the whole presentation is folded INTO the aggregate expression
     # (r13 opt: the old groupBy().agg().select() chain paid one extra
@@ -87,20 +86,19 @@ def aggregate(df: DataFrame, op: str, group_cols: Sequence[str],
         val = _finish(_nan_skipping(lambda c: F.percentile(c, F.lit(q)), v))
     else:
         raise ValueError(f"unknown aggregation: {op}")
-    return df.groupBy(*keys).agg(
-        *[F.first(c).alias(c) for c in carry_cols], val.alias("value"))
+    return df.groupBy(*keys).agg(val.alias("value"))
 
 
 def topk(df: DataFrame, k: int, group_cols: Sequence[str],
-         series_cols: Sequence[str], t_col: str = "t",
-         value_col: str = "value", bottom: bool = False) -> DataFrame:
-    """topk/bottomk: k member series per (group, t), presented as series.
+         series_cols: Sequence[str], bottom: bool = False) -> DataFrame:
+    """topk/bottomk: k member series per (group, t) by `value`, presented
+    as series.
 
     Deterministic tie-break on the series identity columns.
     """
-    v = F.col(value_col)
+    v = F.col("value")
     order = [v.asc() if bottom else v.desc()] + [F.col(c) for c in series_cols]
-    w = Window.partitionBy(*[F.col(c) for c in [*group_cols, t_col]]).orderBy(*order)
+    w = Window.partitionBy(*[F.col(c) for c in [*group_cols, "t"]]).orderBy(*order)
     return (df.where(_valid(v))
               .withColumn("_rk", F.row_number().over(w))
               .where(F.col("_rk") <= k)
@@ -108,9 +106,9 @@ def topk(df: DataFrame, k: int, group_cols: Sequence[str],
 
 
 def salted_sum(df: DataFrame, group_cols: Sequence[str],
-               value_col: str = "value", salt_buckets: int = 32,
-               out_col: str = "value") -> DataFrame:
-    """Two-phase salted sum for pathologically hot grouping keys.
+               salt_buckets: int = 32) -> DataFrame:
+    """Two-phase salted sum of `value` for pathologically hot grouping
+    keys.
 
     AQE's skew handling covers joins; for aggregations Spark's partial
     aggregation usually suffices, but when one group dominates an
@@ -120,20 +118,21 @@ def salted_sum(df: DataFrame, group_cols: Sequence[str],
     """
     salt = F.pmod(F.spark_partition_id() + F.monotonically_increasing_id(),
                   F.lit(salt_buckets)).alias("_salt")
-    partial = (df.select(*group_cols, F.col(value_col), salt)
+    v = F.col("value")
+    partial = (df.select(*group_cols, v, salt)
                  .groupBy(*group_cols, "_salt")
-                 .agg(F.sum(F.when(_valid(F.col(value_col)),
-                                   F.col(value_col))).alias("_ps")))
+                 .agg(F.sum(F.when(_valid(v), v)).alias("_ps")))
     return (partial.groupBy(*group_cols)
-            .agg(_finish(F.sum("_ps")).alias(out_col)))
+            .agg(_finish(F.sum("_ps")).alias("value")))
 
 
-def count_values(df: DataFrame, group_cols: Sequence[str], label: str,
-                 t_col: str = "t", value_col: str = "value") -> DataFrame:
-    """count_values(label, v): count series per distinct value, folding the
-    value into a new label column (CountValuesRowAggregator.scala:1-139)."""
-    v = F.col(value_col)
-    keys = [*group_cols, t_col]
+def count_values(df: DataFrame, group_cols: Sequence[str],
+                 label: str) -> DataFrame:
+    """count_values(label, v): count series per distinct `value` at each
+    `t`, folding the value into a new label column
+    (CountValuesRowAggregator.scala:1-139)."""
+    v = F.col("value")
+    keys = [*group_cols, "t"]
     return (df.where(_valid(v))
               .groupBy(*keys, v.alias(label))
               .agg(F.count(F.lit(1)).cast("double").alias("value")))

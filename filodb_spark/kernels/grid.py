@@ -106,22 +106,22 @@ _EXPLODE_MEMO = Memo(64)
 _PREV_MEMO = Memo(64)
 
 
-def explode_to_steps(df: DataFrame, grid: StepGrid, window: int,
-                     ts_col: str = "ts") -> DataFrame:
+def explode_to_steps(df: DataFrame, grid: StepGrid, window: int) -> DataFrame:
     """Explode samples onto the step grid.
 
-    Adds column ``t`` (window-end instant, ms). A sample appears once per
-    step window ``[t-window, t]`` containing it. Rows contributing to no
-    step are dropped map-side (before any shuffle).
+    Adds column ``t`` (window-end instant, ms) to samples at ``ts``. A
+    sample appears once per step window ``[t-window, t]`` containing it.
+    Rows contributing to no step are dropped map-side (before any
+    shuffle).
 
     The three derived columns are unresolved expressions depending only
-    on (grid, window, ts_col) — memoized per process: Column
+    on (grid, window) — memoized per process: Column
     construction is driver-side py4j round-trips, ~2 ms each on a loaded
     driver, and every windowed query pays this builder (r13 driver-cost
     dissection).
     """
     def build():
-        k_min, k_max = step_bounds(grid, window, F.col(ts_col))
+        k_min, k_max = step_bounds(grid, window, F.col("ts"))
         # explode the window-end instants t = start + k*step DIRECTLY
         # (same long arithmetic as deriving k first): one Generate over
         # one select. sequence() DESCENDS when stop < start, so the
@@ -133,12 +133,12 @@ def explode_to_steps(df: DataFrame, grid: StepGrid, window: int,
             F.when(k_min <= k_max,
                    F.sequence(lo, hi, F.lit(grid.step).cast("long")))
         ).alias("t")
-    return df.select("*", _EXPLODE_MEMO.get((grid, window, ts_col), build))
+    return df.select("*", _EXPLODE_MEMO.get((grid, window), build))
 
 
-def with_prev_sample(df: DataFrame, series_cols: Sequence[str],
-                     ts_col: str = "ts", value_col: str = "value") -> DataFrame:
-    """Attach previous-sample columns (per series, ts-ordered).
+def with_prev_sample(df: DataFrame, series_cols: Sequence[str]) -> DataFrame:
+    """Attach previous-sample columns (per series, `ts`-ordered, of
+    `value`).
 
     ``prev_ts``/``prev_value`` enable reset-correction and idelta/irate
     kernels as pure hash aggregations after the grid explode: a
@@ -153,16 +153,15 @@ def with_prev_sample(df: DataFrame, series_cols: Sequence[str],
     """
     def build():
         w = Window.partitionBy(*[F.col(c) for c in series_cols]) \
-            .orderBy(F.col(ts_col))
+            .orderBy(F.col("ts"))
         # sentinel-coalesced so downstream min_by/max_by never see NULLs
         # (their null-skipping rules differ across engines; a sentinel
         # keeps `prev_ts >= t - window` uniformly false instead)
-        return (F.coalesce(F.lag(ts_col).over(w), F.lit(-(1 << 62)))
+        return (F.coalesce(F.lag("ts").over(w), F.lit(-(1 << 62)))
                 .alias("prev_ts"),
-                F.coalesce(F.lag(value_col).over(w), F.lit(0.0))
+                F.coalesce(F.lag("value").over(w), F.lit(0.0))
                 .alias("prev_value"))
-    prev_ts, prev_value = _PREV_MEMO.get(
-        (tuple(series_cols), ts_col, value_col), build)
+    prev_ts, prev_value = _PREV_MEMO.get(tuple(series_cols), build)
     return df.select("*", prev_ts, prev_value)
 
 

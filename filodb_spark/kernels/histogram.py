@@ -92,27 +92,44 @@ def hist_to_prom_bucket_vectors(df: DataFrame,
 
 
 def assemble_hist(df: DataFrame, group_cols: Sequence[str],
-                  le_col: str = "bucket_le",
-                  value_col: str = "value") -> DataFrame:
-    """Inverse of explode_hist: collect sorted (le, value) arrays."""
-    pair = F.struct(F.col(le_col).alias("le"), F.col(value_col).alias("value"))
+                  skip_nan: bool = False) -> DataFrame:
+    """Inverse of explode_hist: collect sorted (bucket_le, value) arrays.
+    `skip_nan` leaves NaN values out, and a group left with none has no
+    row. `min`/`max` columns fold over all of a group's rows, skipped
+    ones included, into `hmin`/`hmax`."""
+    pair = F.struct(F.col("bucket_le").alias("le"), F.col("value"))
+    if skip_nan:
+        pair = F.when(~F.isnan("value"), pair)    # collect_list skips null
+    comps = [c for c in ("min", "max") if c in df.columns]
     agg = df.groupBy(*group_cols).agg(
-        F.array_sort(F.collect_list(pair)).alias("_ps"))
+        F.array_sort(F.collect_list(pair)).alias("_ps"),
+        *[(F.min if c == "min" else F.max)(c).alias("h" + c) for c in comps])
+    if skip_nan:
+        agg = agg.where(F.size("_ps") > 0)
     h = hist_struct(F.transform("_ps", lambda p: p["le"]),
                     F.transform("_ps", lambda p: p["value"]))
-    return agg.select(*group_cols, h.alias("hist"))
+    return agg.select(*group_cols, h.alias("hist"), *["h" + c for c in comps])
 
 
 def hist_range_function(df: DataFrame, fn: str, series_cols: Sequence[str],
-                        grid: StepGrid, window: int,
-                        hist_col: str = "hist") -> DataFrame:
-    """Range function over histogram series (rate/increase/sum_over_time/
-    last_over_time): bucket-explode -> scalar kernel per bucket ->
-    re-assemble. Matches extrapolatedRateH per-bucket semantics."""
-    exploded = explode_hist(df, hist_col)
-    out = range_function(exploded, fn, [*series_cols, "bucket_le"], grid, window)
-    return assemble_hist(out.where(~F.isnan("value")),
-                         [*series_cols, "t"])
+                        grid: StepGrid, window: int) -> DataFrame:
+    """Range function over histogram series (rate/increase/delta/
+    sum_over_time/last_over_time) in one windowed pass: bucket-explode ->
+    scalar kernel per (series, bucket) -> re-assemble per (series, t).
+    Matches extrapolatedRateH per-bucket semantics.
+
+    `min`/`max` columns (otel-style companions) ride the same pass, as in
+    the reference's RateAndMinMaxOverTime / SumAndMaxOverTime
+    (InternalRangeFunction.scala:57-60): each bucket row windows them and
+    the assembly folds them into `hmin`/`hmax`, the window extremes of
+    the non-NaN samples (null if none). A sample whose buckets the
+    kernel's NaN policy all drops (every one NaN, outside rate/increase)
+    leaves the companions too."""
+    comps = [c for c in ("min", "max") if c in df.columns]
+    exploded = explode_hist(df.select(*series_cols, "ts", "hist", *comps))
+    out = range_function(exploded, fn, [*series_cols, "bucket_le"], grid,
+                         window, companions=comps)
+    return assemble_hist(out, [*series_cols, "t"], skip_nan=True)
 
 
 def cum_at_le(hist: Column, x: Column) -> Column:
@@ -385,9 +402,8 @@ def hist_fraction(lo: float, hi: float, hist: Column) -> Column:
     return F.when(total == 0, F.lit(float("nan"))).otherwise(frac)
 
 
-def counter_correct_hist(df: DataFrame, series_cols: Sequence[str],
-                         hist_col: str = "hist",
-                         ts_col: str = "ts") -> DataFrame:
+def counter_correct_hist(df: DataFrame,
+                         series_cols: Sequence[str]) -> DataFrame:
     """Per-bucket monotone counter reconstruction
     (BufferableCounterCorrectionIteratorH,
     PeriodicSamplesMapper.scala:568-590): each bucket of a cumulative
@@ -399,7 +415,5 @@ def counter_correct_hist(df: DataFrame, series_cols: Sequence[str],
     scalar form, a standalone spec-parity kernel: the production hist
     rate path corrects in-window per bucket."""
     from filodb_spark.kernels.range_fns import counter_correct
-    exploded = explode_hist(df, hist_col)
-    fixed = counter_correct(exploded, [*series_cols, "bucket_le"],
-                            ts_col=ts_col)
-    return assemble_hist(fixed, [*series_cols, ts_col])
+    fixed = counter_correct(explode_hist(df), [*series_cols, "bucket_le"])
+    return assemble_hist(fixed, [*series_cols, "ts"])

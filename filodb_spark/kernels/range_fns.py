@@ -430,7 +430,7 @@ def _build_tiled_uncached(fn: str, window: int, params: tuple):
 
 def _tiled_regression(df: DataFrame, fn: str, series_cols: Sequence[str],
                       grid: StepGrid, window: int, params: tuple,
-                      carry_cols: Sequence[str]) -> DataFrame:
+                      companions: Sequence[str]) -> DataFrame:
     """Tiled deriv / predict_linear: the regression sums depend on the
     window end t (x = (ts - t)/1000), so raw per-tile moments centered
     at a GLOBAL reference would square epoch-scale numbers into
@@ -453,8 +453,7 @@ def _tiled_regression(df: DataFrame, fn: str, series_cols: Sequence[str],
     tiles = g.groupBy(*keys).agg(
         F.count(v).alias("_tn"), F.sum(u).alias("_tsu"),
         F.sum(v).alias("_tsv"), F.sum(u * v).alias("_tsuv"),
-        F.sum(u * u).alias("_tsuu"),
-        *[F.first(c).alias(c) for c in carry_cols])
+        F.sum(u * u).alias("_tsuu"), *_companion_aggs(companions))
     ex = (tiles.withColumn("_k", F.explode(F.sequence(F.col("_gmin"),
                                                       F.col("_gmax"))))
           .withColumn("t", (F.lit(grid.start) + F.col("_k") * F.lit(grid.step))
@@ -472,21 +471,21 @@ def _tiled_regression(df: DataFrame, fn: str, series_cols: Sequence[str],
         F.sum(tsv).alias("_sy"),
         F.sum(F.col("_tsuv") + d * tsv).alias("_sxy"),
         F.sum(F.col("_tsuu") + 2.0 * d * tsu + tn * d * d).alias("_sxx"),
-        *[F.first(c) .alias(c) for c in carry_cols])
+        *_companion_aggs(companions))
     _, post = _build(fn, window, params)
-    return out.select(*fkeys, *carry_cols, post.alias("value"))
+    return out.select(*fkeys, post.alias("value"), *companions)
 
 
 def _tiled_range_function(df: DataFrame, fn: str, series_cols: Sequence[str],
                           grid: StepGrid, window: int, params: tuple,
-                          carry_cols: Sequence[str],
+                          companions: Sequence[str],
                           prev_attached: bool = False) -> DataFrame:
     """Two-level tiled evaluation (see block comment above). `df` is
     NaN-filtered with canonical ts/value names; prev columns attached here
     when the pair stream needs them (unless the caller pre-attached)."""
     if fn in ("deriv", "predict_linear"):
         return _tiled_regression(df, fn, series_cols, grid, window,
-                                 params, carry_cols)
+                                 params, companions)
     saggs, paggs, comb, post = _build_tiled(fn, window, params)
     if paggs is not None and not prev_attached:
         df = with_prev_sample(df, series_cols)
@@ -494,12 +493,12 @@ def _tiled_range_function(df: DataFrame, fn: str, series_cols: Sequence[str],
     def grouped(frame: DataFrame, lo: Column, hi: Column, aggs) -> DataFrame:
         g = (frame.withColumn("_gmin", lo).withColumn("_gmax", hi)
                   .where(F.col("_gmin") <= F.col("_gmax")))
-        keys = [*series_cols, "_gmin", "_gmax"]
-        extra = [F.first(c).alias(c) for c in carry_cols] if aggs is saggs else []
-        return g.groupBy(*keys).agg(*aggs, *extra)
+        return g.groupBy(*series_cols, "_gmin", "_gmax").agg(*aggs)
 
     k_min, k_max = step_bounds(grid, window, F.col("ts"))
-    tiles = grouped(df, k_min, k_max, saggs)
+    # per-tile companion partials ride the sample stream; the pair
+    # stream leaves them null, which the combine's min/max skip
+    tiles = grouped(df, k_min, k_max, [*saggs, *_companion_aggs(companions)])
     if paggs is not None:
         # pair (prev, cur) is in window k iff k_min(cur) <= k <= k_max(prev)
         # (prev_ts sentinel => empty range => filtered, no special case)
@@ -512,9 +511,8 @@ def _tiled_range_function(df: DataFrame, fn: str, series_cols: Sequence[str],
                          .cast("long"))
              .drop("_gmin", "_gmax", "_k"))
     keys = [*series_cols, "t"]
-    carries = [F.first(c, ignorenulls=True).alias(c) for c in carry_cols]
-    return (exploded.groupBy(*keys).agg(*comb, *carries)
-                    .select(*keys, *carry_cols, post.alias("value")))
+    return (exploded.groupBy(*keys).agg(*comb, *_companion_aggs(companions))
+                    .select(*keys, post.alias("value"), *companions))
 
 
 RANGE_FUNCTIONS = (
@@ -533,21 +531,33 @@ RANGE_FUNCTIONS = (
 CUMULATIVE_COUNTER_FNS = frozenset({"rate", "increase", "irate"})
 
 
+def _companion_aggs(companions: Sequence[str]) -> list[Column]:
+    """Window extreme of each companion column (`range_function`): NaN
+    turns null first, since Spark orders NaN above every double. Min and
+    max are associative, so one aggregate serves the explode pass, the
+    tile partial and the tile combine."""
+    return [(F.min if c == "min" else F.max)(F.when(~F.isnan(c), F.col(c)))
+            .alias(c) for c in companions]
+
+
 def range_function(df: DataFrame, fn: str, series_cols: Sequence[str],
                    grid: StepGrid, window: int, params: tuple = (),
-                   ts_col: str = "ts", value_col: str = "value",
-                   carry_cols: Sequence[str] = (),
+                   companions: Sequence[str] = (),
                    tiling: bool | None = None,
                    honor_stale_marker: bool = False,
                    prev_attached: bool = False) -> DataFrame:
     """Evaluate PromQL range function `fn` on the step grid.
 
-    `df` must have `series_cols`, `ts_col` (long ms) and `value_col`
-    (double). Output: series_cols + carry_cols + [t (long ms), value
-    (double)], one row per (series, t) with >=1 sample in [t-window, t].
-    `carry_cols` are series-constant columns (e.g. the labels map behind
-    a canonical key) carried through the aggregation with first() —
-    avoids a re-join to recover them.
+    `df` must have `series_cols`, `ts` (long ms) and `value` (double).
+    Output: series_cols + [t (long ms), value (double)] + companions, one
+    row per (series, t) with >=1 sample in [t-window, t].
+
+    `companions` (a subset of ``("min", "max")``) are columns of `df`
+    windowed in the same grouped pass as `value`: ``min`` takes its
+    window-min, ``max`` its window-max, each over the non-NaN samples
+    that `value`'s NaN policy keeps (null when there are none) — the
+    reference's RateAndMinMaxOverTime / SumAndMaxOverTime
+    (InternalRangeFunction.scala:57-60). Not for the mad functions.
 
     `tiling` picks one of the two plans. None = choose from the query:
     the two-level tiled plan when the fn is associative-decomposable and
@@ -581,7 +591,7 @@ def range_function(df: DataFrame, fn: str, series_cols: Sequence[str],
         prev_attached = False
     stale_last = honor_stale_marker and fn == "last_over_time"
     if stale_last:
-        df = df.where(F.col(value_col).isNotNull())  # keep NaN markers
+        df = df.where(F.col("value").isNotNull())  # keep NaN markers
     elif fn in CUMULATIVE_COUNTER_FNS:
         # NaN on a cumulative counter is the EXPLICIT end-of-series
         # counter-reset marker: it stays a sample and reads as 0, so
@@ -590,16 +600,12 @@ def range_function(df: DataFrame, fn: str, series_cols: Sequence[str],
         # PeriodicSamplesMapper.scala:560; golden
         # WindowIteratorSpec.scala:257-284 — dropping the marker
         # instead loses the pre-reset increase entirely)
-        v = F.col(value_col)
+        v = F.col("value")
         df = (df.where(v.isNotNull())
-                .withColumn(value_col,
+                .withColumn("value",
                             F.when(F.isnan(v), F.lit(0.0)).otherwise(v)))
     else:
-        df = drop_nan(df, value_col)
-    if value_col != "value":
-        df = df.withColumnRenamed(value_col, "value")
-    if ts_col != "ts":
-        df = df.withColumnRenamed(ts_col, "ts")
+        df = drop_nan(df)
     if fn == "mad_over_time":
         return _mad_over_time(df, series_cols, grid, window)
     if fn == "last_over_time_is_mad_outlier":
@@ -612,16 +618,16 @@ def range_function(df: DataFrame, fn: str, series_cols: Sequence[str],
         tiling = fn in TILEABLE and window // grid.step >= TILE_RATIO
     if tiling:
         return _stale_filter(_tiled_range_function(
-            df, fn, series_cols, grid, window, params, carry_cols,
+            df, fn, series_cols, grid, window, params, companions,
             prev_attached=prev_attached))
     if fn in NEEDS_PREV and not prev_attached:
         df = with_prev_sample(df, series_cols)
     exploded = explode_to_steps(df, grid, window)
     aggs, post = _build(fn, window, params)
-    aggs = [*aggs, *[F.first(c).alias(c) for c in carry_cols]]
     keys = [*series_cols, "t"]
-    return _stale_filter(exploded.groupBy(*keys).agg(*aggs)
-                         .select(*keys, *carry_cols, post.alias("value")))
+    return _stale_filter(
+        exploded.groupBy(*keys).agg(*aggs, *_companion_aggs(companions))
+        .select(*keys, post.alias("value"), *companions))
 
 
 def _mad_over_time(df: DataFrame, series_cols: Sequence[str],
@@ -675,9 +681,7 @@ def limit_series(df: DataFrame, k: int, series_cols: Sequence[str]) -> DataFrame
     return df.join(keys, [*series_cols], "left_semi")
 
 
-def counter_correct(df: DataFrame, series_cols: Sequence[str],
-                    ts_col: str = "ts",
-                    value_col: str = "value") -> DataFrame:
+def counter_correct(df: DataFrame, series_cols: Sequence[str]) -> DataFrame:
     """Monotone counter reconstruction
     (BufferableCounterCorrectionIterator,
     PeriodicSamplesMapper.scala:547-566): every dip adds the previous
@@ -694,20 +698,9 @@ def counter_correct(df: DataFrame, series_cols: Sequence[str],
     The histogram (per-bucket) variant is
     kernels.histogram.counter_correct_hist."""
     from pyspark.sql import Window
-    v0 = F.col(value_col)
+    v0 = F.col("value")
     v = F.when(F.isnan(v0) | v0.isNull(), F.lit(0.0)).otherwise(v0)
-    w = Window.partitionBy(*series_cols).orderBy(ts_col)
+    w = Window.partitionBy(*series_cols).orderBy("ts")
     prev = F.lag(v).over(w)
     dip = F.when(prev.isNotNull() & (v < prev), prev).otherwise(F.lit(0.0))
-    return df.withColumn(value_col, v + F.sum(dip).over(w))
-
-
-def instant_default(df: DataFrame, series_cols: Sequence[str], grid: StepGrid,
-                    lookback_ms: int = 5 * 60 * 1000,
-                    ts_col: str = "ts", value_col: str = "value") -> DataFrame:
-    """Default PromQL instant selector: last sample within the staleness
-    lookback at each step (PeriodicSamplesMapper.scala:78-81). Raw data
-    honors NaN staleness markers (LastSampleChunkedFunctionD)."""
-    return range_function(df, "last_over_time", series_cols, grid, lookback_ms,
-                          ts_col=ts_col, value_col=value_col,
-                          honor_stale_marker=True)
+    return df.withColumn("value", v + F.sum(dip).over(w))

@@ -262,7 +262,11 @@ class TsStore:
     input's cache: the field holds the laid-out copy, cached at the
     input's storage level, and the input is unpersisted. Schema and
     columns are unchanged, and there is still one cached copy. Uncached
-    and parquet-backed frames are used as given.
+    and parquet-backed frames are used as given. Because the input's
+    cache is released, derive further frames (e.g.
+    `partkey_from_samples(...)`) from `store.df`, not from the frame
+    passed in: one derived from the input and planned after
+    construction reads the source again.
     """
 
     df: DataFrame
@@ -1199,26 +1203,6 @@ class PromQLEngine:
         return range_function(dsf, fn, ["_sk"], grid, window,
                               params=params)
 
-    def _hist_window(self, df: DataFrame, fn: str, grid: StepGrid,
-                     window: int) -> DataFrame:
-        """Histogram range function + min/max companion columns
-        (SumAndMaxOverTime / RateAndMinMaxOverTime,
-        InternalRangeFunction.scala:57-60): window-min of min /
-        window-max of max ride along. Input needs _sk/ts/hist
-        [+min/max]; output _sk/t/hist [+hmin/hmax]."""
-        from filodb_spark.kernels.histogram import hist_range_function
-        out = hist_range_function(df.select("_sk", "ts", "hist"), fn,
-                                  ["_sk"], grid, window)
-        for comp, cfn, alias in (("min", "min_over_time", "hmin"),
-                                 ("max", "max_over_time", "hmax")):
-            if comp in df.columns:
-                cw = range_function(
-                    df.select("_sk", "ts", F.col(comp).alias("value")),
-                    cfn, ["_sk"], grid, window) \
-                    .withColumnRenamed("value", alias)
-                out = out.join(cw, ["_sk", "t"], "left")
-        return out
-
     def _tiling_arg(self, fn: str, sel: A.VectorSelector, grid: StepGrid,
                     window: int) -> bool | None:
         """range_function's tiling param: False (grid explode) in the
@@ -1292,6 +1276,7 @@ class PromQLEngine:
             # histogram schema: per-bucket kernels (extrapolatedRateH)
             if fn not in self.HIST_RANGE_FNS:
                 raise ValueError(f"{fn} is not defined over histograms")
+            from filodb_spark.kernels.histogram import hist_range_function
             # raw/DS split for histogram schemas: the downsampled hist
             # table is a dip-preserving row subset with the raw schema
             # (downsample_hist), so the same per-bucket kernels run on
@@ -1301,13 +1286,13 @@ class PromQLEngine:
             split = self._ds_split(grid, window) \
                 if self.store.ds_hist_df is not None else None
             if split is None:
-                out = self._hist_window(df, fn, grid, window)
+                out = hist_range_function(df, fn, ["_sk"], grid, window)
             else:
                 self._check_ds_lookback(fn, window)
-                out = self._hist_window(self._ds_select(sel), fn, grid,
-                                        window)
+                out = hist_range_function(self._ds_select(sel), fn, ["_sk"],
+                                          grid, window)
                 if split != "all_ds":
-                    raw = self._hist_window(df, fn, grid, window)
+                    raw = hist_range_function(df, fn, ["_sk"], grid, window)
                     # min/max companions survive the stitch only when
                     # BOTH tables carry them (a min/max-less DS mount
                     # cannot answer the pre-boundary companion values)

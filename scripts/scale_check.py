@@ -61,8 +61,7 @@ def main():
                        grid, window).count()
         t0 = time.time()
         r = range_function(tbl, "rate", ["event_type", "user_id"], grid, window)
-        out = aggregate(r.where(~F.isnan("value")), "sum", ["event_type"],
-                        t_col="t")
+        out = aggregate(r.where(~F.isnan("value")), "sum", ["event_type"])
         rows = out.count()
         dt = time.time() - t0
         shutil.rmtree(tmp, ignore_errors=True)

@@ -202,6 +202,74 @@ class TestMetadataHttpParams:
         assert rows["_overflow_"] > 0
 
 
+class TestMetadataRequestPath:
+    """Metadata routes take the one request path of query/query_range:
+    the request's own `query-*` job group and scheduler pool, under its
+    `timeout=` deadline."""
+
+    ROUTES = ["/api/v1/labels", "/api/v1/label/__name__/values",
+              "/api/v1/series?match[]=purchase",
+              "/api/v1/status/label_cardinality",
+              "/api/v1/status/ts_cardinality"]
+
+    def test_runs_in_request_job_group(self, spark, server, monkeypatch):
+        from filodb_spark import metadata as md
+        sc = spark.sparkContext
+        groups, real = [], md._series_rows
+
+        def spy(*args, **kwargs):
+            groups.append(sc.getLocalProperty("spark.jobGroup.id"))
+            return real(*args, **kwargs)
+        monkeypatch.setattr(md, "_series_rows", spy)
+        for route in self.ROUTES:
+            for extra in ("", "timeout=120s"):
+                sep = "&" if "?" in route else "?"
+                url = f"{server}{route}{sep}{extra}" if extra \
+                    else f"{server}{route}"
+                with urllib.request.urlopen(url, timeout=120) as r:
+                    assert json.loads(r.read())["status"] == "success"
+        assert len(groups) == 2 * len(self.ROUTES)
+        assert all(g and g.startswith("query-") for g in groups), groups
+        assert len(set(groups)) == len(groups)     # one group per request
+
+    def test_timeout_cancels_metadata_job(self, spark, server, monkeypatch):
+        import time
+        import urllib.error
+        from filodb_spark import metadata as md
+        sc = spark.sparkContext
+        groups = []
+
+        def nap(rows):
+            time.sleep(30)
+            return rows
+
+        def slow_rows(*args, **kwargs):
+            groups.append(sc.getLocalProperty("spark.jobGroup.id"))
+            sc.parallelize([0], 1).mapPartitions(nap).count()
+            raise AssertionError("the deadline should have cancelled this")
+        monkeypatch.setattr(md, "_series_rows", slow_rows)
+        t0 = time.monotonic()
+        with pytest.raises(urllib.error.HTTPError) as ei:
+            urllib.request.urlopen(
+                f"{server}/api/v1/label/x/values?timeout=1s", timeout=20)
+        assert time.monotonic() - t0 < 5
+        assert ei.value.code == 503
+        assert json.loads(ei.value.read())["errorType"] == "timeout"
+        [group] = groups
+        assert group and group.startswith("query-")
+        tracker = sc.statusTracker()
+        assert tracker.getJobIdsForGroup(group)    # the slow job started
+
+        def running():
+            return [j for j in tracker.getJobIdsForGroup(group)
+                    if (info := tracker.getJobInfo(j)) is not None
+                    and info.status == "RUNNING"]
+        deadline = time.monotonic() + 15
+        while running() and time.monotonic() < deadline:
+            time.sleep(0.2)
+        assert not running()
+
+
 class TestHttpDsMount:
     """HTTP surface over a DOWNSAMPLE mount: boundary-crossing counter
     queries stitch raw/DS, and metadata endpoints cover the

@@ -283,3 +283,21 @@ class TestLayoutGuards:
             store, jobs = _jobs(spark, group, lambda: TsStore(df))
             assert jobs == 0, group
             assert store.df is df, group
+
+
+@pytest.mark.parametrize("name", ["label_values", "label_names"])
+def test_label_listing_sorts_without_range_partition(spark, stores, name):
+    """A label listing sorts its small distinct result on one partition:
+    no range-partitioning sample job (4 jobs before, 5 for label names
+    with its `_type_` probe), and the order orderBy gave, UTF-8 bytes."""
+    laid, plain = stores
+
+    def listing(store):
+        if name == "label_values":
+            return metadata.label_values(store, "instance")
+        return metadata.label_names(store)
+    got, jobs = _jobs(spark, f"layout-{name}",
+                      lambda: [v for (v,) in listing(laid).collect()])
+    assert jobs <= 2
+    want = {v for (v,) in listing(plain).collect()}
+    assert got == sorted(want, key=str.encode) and len(got) > 3

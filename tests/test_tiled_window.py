@@ -130,15 +130,35 @@ def test_force_tiled_rejects_non_tileable(spark, samples):
                        WINDOW, params=(0.9,), tiling=True).collect()
 
 
-def test_carry_cols_survive_tiling(spark):
+@pytest.mark.parametrize("fn", ["sum_over_time", "rate"])
+def test_companions_survive_tiling(spark, fn):
+    """min/max companions ride both plans: per-tile partials combined as
+    min of mins / max of maxes (the pair stream leaves them null), NaN
+    skipped, null where a window holds no non-NaN value — equal to the
+    explode plan and to a brute-force window scan."""
+    nan = float("nan")
+    rows = [("a", 1_000_000 + i * 1_000, float(i),
+             nan if i % 9 == 0 or 80 <= i < 150 else float(i % 13),
+             nan if i % 11 == 0 or 80 <= i < 150 else float(i * 7 % 17))
+            for i in range(200)]
     df = spark.createDataFrame(
-        [("a", "lbl-a", 1_000_000 + i * 1_000, float(i)) for i in range(200)],
-        "series string, extra string, ts long, value double")
-    out = range_function(df, "sum_over_time", ["series"],
-                         StepGrid(1_000_000, 1_200_000, 5_000), 160_000,
-                         carry_cols=["extra"], tiling=True)
-    rows = out.collect()
-    assert rows and all(r["extra"] == "lbl-a" for r in rows)
+        rows, "series string, ts long, value double, min double, max double")
+    grid, window = StepGrid(1_000_000, 1_200_000, 5_000), 40_000
+    got = {}
+    for tiling in (True, False):
+        out = range_function(df, fn, ["series"], grid, window,
+                             companions=["min", "max"], tiling=tiling)
+        got[tiling] = {r["t"]: (r["min"], r["max"]) for r in out.collect()}
+    assert got[True] == got[False] and len(got[True]) == grid.n_steps
+
+    def extreme(pick, col, t):
+        vs = [r[col] for r in rows
+              if t - window <= r[1] <= t and not math.isnan(r[col])]
+        return pick(vs) if vs else None
+    want = {t: (extreme(min, 3, t), extreme(max, 4, t))
+            for t in range(grid.start, grid.end + 1, grid.step)}
+    assert got[True] == want
+    assert (None, None) in want.values()   # an all-NaN companion window
 
 
 def test_hist_rate_inherits_tiling(spark):

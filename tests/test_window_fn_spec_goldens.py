@@ -175,11 +175,13 @@ class TestLastSampleStaleMarker:
     is returned; an empty window is absent."""
 
     def _last(self, spark, samples, at, window=5 * 60 * 1000):
-        from filodb_spark.kernels.range_fns import instant_default
+        # the engine's instant-selector call (compiler._run_range_fn)
+        from filodb_spark.kernels.range_fns import range_function
         df = spark.createDataFrame(
             [("s", t, v) for t, v in samples], "k string, ts long, value double")
-        out = instant_default(df, ["k"], StepGrid(at, at, 1_000), window
-                              ).collect()
+        out = range_function(df, "last_over_time", ["k"],
+                             StepGrid(at, at, 1_000), window,
+                             honor_stale_marker=True).collect()
         assert len(out) <= 1
         return out[0]["value"] if out else None
 
