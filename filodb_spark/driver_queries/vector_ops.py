@@ -227,7 +227,7 @@ def q_ann_ivfpq_kmeans(spark, sf_dir):
     """IVF x PQ over TRAINED coarse buckets (r4 verdict item 2):
     deterministic portable k-means clusters replace the sign-hash
     cells at the same candidate fraction (1/16) — measured recall@3
-    lift ~4-5x (scripts/recall_lift_ivfpq_kmeans.py). Exact oracle:
+    lift ~4-5x (PERF.md). Exact oracle:
     the SQL twin unrolls the Lloyd's rounds, probe ranking, PQ
     encode and ADC bit-for-bit."""
     e = _emb(spark, sf_dir)

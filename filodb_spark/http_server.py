@@ -94,6 +94,17 @@ def _parse_timeout(q: dict) -> float | None:
     return float(raw)
 
 
+def _health(engine) -> dict:
+    """The `/__health` probe body: SparkContext liveness by a 1-row JVM
+    round trip, plus the store's columns."""
+    sc = engine.spark.sparkContext
+    alive = (not sc._jsc.sc().isStopped()) and \
+        engine.spark.sql("SELECT 1").collect()[0][0] == 1
+    return {"status": "healthy" if alive else "down",
+            "sparkAppId": sc.applicationId,
+            "storeColumns": [f.name for f in engine.store.df.schema]}
+
+
 # Remote-write request-body cap (snappy-compressed bytes). Prometheus
 # default max samples per send is 500-2000 (~100 KB compressed); 10 MB
 # leaves generous headroom while bounding per-request driver memory.
@@ -221,13 +232,19 @@ def make_handler(engine, write_buffer=None, bearer_token=None,
                 raw = self.rfile.read(n)
                 accepted = rr.decode_accepted_types(rr.snappy_decompress(raw))
                 if rr.STREAMED_XOR_CHUNKS in accepted:
-                    body = rr.run_read_request_streamed(engine, raw)
+                    read = rr.run_read_request_streamed
                     ctype = ("application/x-streamed-protobuf; "
                              "proto=prometheus.ChunkedReadResponse")
                     cenc = None
                 else:           # SAMPLES — the universal fallback
-                    body = rr.run_read_request(engine, raw)
+                    read = rr.run_read_request
                     ctype, cenc = "application/x-protobuf", "snappy"
+                # the read's Spark work takes the GET routes' request
+                # path: own job group and pool, `timeout=` deadline
+                q = {k: v[0] for k, v in parse_qs(url.query).items()}
+                body = run_with_timeout(engine.spark,
+                                        lambda: read(engine, raw),
+                                        _parse_timeout(q))
                 self.send_response(200)
                 self.send_header("Content-Type", ctype)
                 if cenc:
@@ -235,6 +252,9 @@ def make_handler(engine, write_buffer=None, bearer_token=None,
                 self.send_header("Content-Length", str(len(body)))
                 self.end_headers()
                 self.wfile.write(body)
+            except TimeoutError as ex:
+                self._send({"status": "error", "errorType": "timeout",
+                            "error": str(ex)}, 503)
             except Exception as ex:
                 traceback.print_exc()
                 self._error(f"remote read: {ex}", 400)
@@ -273,40 +293,42 @@ def make_handler(engine, write_buffer=None, bearer_token=None,
                     # analog is session + executor + store reachability:
                     # a 1-row JVM round trip proves the SparkContext is
                     # alive, the store schema proves the source resolves
-                    # (metadata only — no data scan on a health probe)
+                    # (metadata only — no data scan on a health probe);
+                    # the probe runs in the request's job group and
+                    # deadline like every route's Spark work
                     try:
-                        sc = engine.spark.sparkContext
-                        alive = (not sc._jsc.sc().isStopped()) and \
-                            engine.spark.sql("SELECT 1").collect()[0][0] == 1
-                        body = {"status": "healthy" if alive else "down",
-                                "sparkAppId": sc.applicationId,
-                                "storeColumns": [f.name for f in
-                                                 engine.store.df.schema]}
-                        return self._send(body, 200 if alive else 503)
+                        body = run_with_timeout(
+                            engine.spark, lambda: _health(engine), timeout_s)
                     except Exception as ex:
                         return self._send({"status": "down",
                                            "error": str(ex)}, 503)
+                    return self._send(
+                        body, 200 if body["status"] == "healthy" else 503)
                 if path.endswith("/api/v1/query_range"):
                     # &explainOnly=true plans without executing
-                    # (PrometheusApiRoute.scala:52-58); &stats=true
-                    # appends queryStats/queryWarnings
+                    # (PrometheusApiRoute.scala:52-58) — planning alone
+                    # can launch probe jobs, so it takes the request
+                    # path too; &stats=true appends
+                    # queryStats/queryWarnings
                     start, end = float(q["start"]), float(q["end"])
                     step = float(q.get("step", "60"))
                     if q.get("explainOnly", "") in ("true", "1"):
-                        return self._send(render.explain_range_api(
-                            engine, q["query"], start, end, step))
-
-                    def work():
-                        # plan-time enforced limit, in the request's job
-                        # group and deadline: reject before the full job
-                        # runs (413, ExecPlan.scala:214-226)
-                        engine.enforce_plan_limits(
-                            q["query"], int(start * 1000), int(end * 1000),
-                            int(step * 1000), warn_limits)
-                        return render.query_range_api(
-                            engine, q["query"], start, end, step,
-                            stats=want_stats, limits=warn_limits,
-                            histogram_map=hist_map)
+                        def work():
+                            return render.explain_range_api(
+                                engine, q["query"], start, end, step)
+                    else:
+                        def work():
+                            # plan-time enforced limit, in the request's
+                            # job group and deadline: reject before the
+                            # full job runs (413, ExecPlan.scala:214-226)
+                            engine.enforce_plan_limits(
+                                q["query"], int(start * 1000),
+                                int(end * 1000), int(step * 1000),
+                                warn_limits)
+                            return render.query_range_api(
+                                engine, q["query"], start, end, step,
+                                stats=want_stats, limits=warn_limits,
+                                histogram_map=hist_map)
                 elif path.endswith("/api/v1/query"):
                     t = float(q["time"])
 

@@ -63,24 +63,15 @@ def _ds_scan(store: TsStore, sel: VectorSelector | None) -> DataFrame | None:
     chunkless fallback scans its sample tables instead. The counter
     and histogram DS tables keep the raw schemas, so TsStore.select
     runs verbatim on the ds_view; the ds-GAUGE rewrite table (rollup
-    schema) is matcher-filtered directly, with `_type_` resolved
-    through the same virtual-label expression label_values uses."""
+    schema) is scoped by TsStore.ds_gauge_select, the selection the
+    query path's DS-gauge part uses."""
     frames = []
     view = store.ds_view()
     if view is not None:
         frames.append(_scan_tables(view, sel))
     if store.ds_df is not None:
-        from filodb_spark.promql.compiler import _apply_label_matchers
-        df = store.ds_df.select("labels", "ts")
-        if sel is not None:
-            if sel.metric is not None:
-                df = df.where(F.col("labels")["__name__"] == sel.metric)
-            df = _apply_label_matchers(
-                df, [m for m in sel.matchers if m.name != "_type_"])
-            for m in (m for m in sel.matchers if m.name == "_type_"):
-                df = df.where(store.type_expr(F.col("labels")["__name__"])
-                              == m.value)
-        frames.append(df)
+        df = store.ds_df if sel is None else store.ds_gauge_select(sel)
+        frames.append(df.select("labels", "ts"))
     if not frames:
         return None
     out = frames[0]

@@ -497,7 +497,7 @@ def lsh_verified_pairs(df: DataFrame, est_threshold: float = 0.2,
     from the candidate criterion (a 3-gram verify against 5-gram
     signatures passed ~275x more pairs on the synthetic corpus — looser
     features, not better recall — and runtime scaled with that bloat;
-    measured in scale_check_dedup, round 3).
+    measured in round 3; PERF.md keeps the numbers).
 
     Output: (d1 < d2, jaccard) with jaccard the TRUE n-gram Jaccard.
     """
@@ -547,9 +547,9 @@ def winnow_near_dup_pairs(df: DataFrame, id_col: str = "doc_id",
     cap is not an optimization but the correctness of the plan shape —
     one boilerplate fingerprint shared by d documents emits d*(d-1)/2
     pair rows, so the uncapped join is quadratic in the worst key
-    (scripts/scale_check_winnow.py skips its uncapped 8x cell for
-    exactly that reason). Pass max_df=None EXPLICITLY to opt into the
-    uncapped join on corpora known to carry no boilerplate.
+    (the r12 winnow scale probe, PERF.md, skipped its uncapped 8x
+    cell for exactly that reason). Pass max_df=None EXPLICITLY to opt
+    into the uncapped join on corpora known to carry no boilerplate.
 
     Output: (id_a, id_b, shared) with id_a < id_b, shared = count of
     common fingerprints (post-cap), shared >= min_shared."""

@@ -1114,7 +1114,7 @@ def ivfpq_kmeans_topk(corpus: DataFrame, queries: DataFrame, k: int,
     kmeans_fit_portable instead of sign-hash cells — measured on the
     fixture, trained buckets lift recall@3 well above sign-hash at the
     SAME candidate fraction (sign-hash partitions by quadrant, k-means
-    by density; see scripts/recall_lift_ivfpq_kmeans.py / PERF.md).
+    by density; see PERF.md).
 
     Fully oracle-exact end to end: deterministic centroids (lowest-id
     seeds, per-round rounding), exact argmin bucket assignment, exact
@@ -1142,7 +1142,7 @@ def ivfpq_kmeans_topk(corpus: DataFrame, queries: DataFrame, k: int,
     skip the per-search encode — the write-once/search-forever shape;
     at production codebook sizes (m=8, n_codes=256) the encode is also
     the expression-compile-heavy stage, so amortizing it matters even
-    at fixture scale (scripts/prodshape_ivfpq.py measures this).
+    at fixture scale (PERF.md r6 measures this).
     `validate=False` skips the one-aggregate-pass code check for
     already-validated indexes (ADVICE r5)."""
     if n_probes < 1:

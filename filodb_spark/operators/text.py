@@ -528,8 +528,8 @@ def bpe_encode(df: DataFrame, merges: Sequence, id_col: str = "doc_id",
     Pandas UDF, O(tokens) regardless of table size; the in-plan form
     not only slows linearly with merges but exceeds Catalyst's
     analyzer iteration budget past ~100 folds
-    (scripts/scale_check_bpe_encode.py: at 64 merges the dict twin is
-    ~25x faster; at 128 the in-plan plan fails to analyze).
+    (PERF.md: at 64 merges the dict twin is ~25x faster; at 128 the
+    in-plan plan fails to analyze).
 
     Output: one row per input row — (id, subwords array<string>,
     n_subwords). Whole-row fertility panels compose downstream.
@@ -622,8 +622,7 @@ def bpe_encode_dict(df: DataFrame, merges: Sequence,
     ("repeatedly fuse the lowest-rank adjacent pair", Sennrich et al.
     2016) whose cost depends on WORD LENGTH, not merge count — total
     work O(tokens), flat in the table size
-    (scripts/scale_check_bpe_encode.py + PERF.md measure the
-    crossover). Distinct words are memoized per batch, so repeated
+    (PERF.md measures the crossover). Distinct words are memoized per batch, so repeated
     vocabulary costs one encode per batch.
 
     Row-equality with bpe_encode is guaranteed, not assumed: the

@@ -509,6 +509,24 @@ class TsStore:
                           F.lit("otel-exp-delta-histogram")).otherwise(expr)
         return expr
 
+    def ds_gauge_select(self, sel: A.VectorSelector) -> DataFrame:
+        """The ds-GAUGE rewrite table (rollup schema) scoped by a
+        selector: metric name, label matchers, and the virtual `_type_`
+        label resolved row-wise through type_expr. The one selection
+        the DS-gauge query part and the metadata DS scan share."""
+        df = self.ds_df
+        name = F.col("labels")[METRIC]
+        if sel.metric is not None:
+            df = df.where(name == sel.metric)
+        df = _apply_label_matchers(
+            df, [m for m in sel.matchers if m.name != "_type_"])
+        for m in sel.matchers:
+            if m.name == "_type_":
+                if m.op != "=":
+                    raise ValueError("_type_ supports only the = matcher")
+                df = df.where(self.type_expr(name) == m.value)
+        return df
+
     def _hist_full(self) -> DataFrame:
         extra = [c for c in ("min", "max") if c in self.hist_df.columns]
         return self.hist_df.select("labels", "ts", "sum", "count",
@@ -1167,16 +1185,11 @@ class PromQLEngine:
         same way. Returns (_sk, t, value)."""
         from filodb_spark.streaming.downsample import (_DS_REWRITE,
                                                        range_function_ds)
-        ds = self.store.ds_df
-        labels = F.col("labels")
-        if sel.metric:
-            ds = ds.where(labels[METRIC] == sel.metric)
-        # full matcher semantics on the DS side too (a regex/!= that
+        # full selector semantics on the DS side too (a matcher that
         # only the raw side honored would return extra series on steps
         # before the retention boundary)
-        ds = _apply_label_matchers(
-            ds, [m for m in sel.matchers if m.name != "_type_"])
-        ds = ds.withColumn("_sk", bin_k.series_key(labels))
+        ds = self.store.ds_gauge_select(sel).withColumn(
+            "_sk", bin_k.series_key(F.col("labels")))
         if fn in _DS_REWRITE:
             return range_function_ds(ds, fn, ["_sk"], grid, window)
         return range_function(

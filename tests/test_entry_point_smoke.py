@@ -1,7 +1,10 @@
 """One cheap smoke test per entry point whose full battery is `slow`
-(test_cli, test_repair, test_partkey, test_streaming_sources), so the
-default profile still drives the CLI `query` subcommand, a repair copy,
-a part-key build + append, and streaming file ingest end to end."""
+(test_cli, test_repair, test_partkey, test_streaming_sources,
+test_cardbuster, test_streaming_preagg, test_planner_corpus,
+test_property_kernels), so the default profile still drives the CLI
+`query` subcommand, a repair copy, a part-key build + append, streaming
+file ingest, a cardinality bust, the streaming pre-aggregation producer,
+the planner-spec corpus and the randomized kernel model end to end."""
 
 from __future__ import annotations
 
@@ -84,3 +87,63 @@ def test_streaming_file_ingest(spark, tmp_path):
     got = spark.read.parquet(str(out))
     assert got.count() == 3
     assert got.where(F.col("labels")["__name__"] == "m").count() == 3
+
+
+def test_cardbuster_bust(spark, tmp_path):
+    from filodb_spark.operators.cardbuster import bust
+    from filodb_spark.partkey import read_partkey_table, write_partkey_table
+    from filodb_spark.sources.table import write_series_table
+    data, pk = str(tmp_path / "series"), str(tmp_path / "pk")
+    write_series_table(_series(spark), data)
+    write_partkey_table(_series(spark), pk)
+    stats = bust(spark, data, pk, [{"instance": "x"}], simulate=False)
+    assert stats["series_deleted"] == stats["partkeys_deleted"] == 2
+    left = spark.read.parquet(data)
+    assert left.count() == 12
+    assert left.where(F.col("labels")["instance"] == "x").count() == 0
+    assert read_partkey_table(spark, pk).count() == 2
+
+
+def test_streaming_preagg_matches_batch(spark, tmp_path):
+    from filodb_spark.streaming.preagg import build_preagg, streaming_preagg
+    from tests.test_streaming_preagg import RES, RULE, RULES, _raw_rows
+    schema = "labels map<string,string>, ts long, value double"
+    src, out = tmp_path / "in", tmp_path / "out"
+    src.mkdir()
+    with open(src / "b.json", "w") as f:
+        for lab, ts, v in _raw_rows():
+            f.write(json.dumps({"labels": lab, "ts": ts, "value": v}) + "\n")
+    stream = spark.readStream.schema(schema).json(str(src))
+    q = (streaming_preagg(stream, "cpu", RULE, RES,
+                          watermark_delay="0 seconds")
+         .writeStream.format("parquet").option("path", str(out))
+         .option("checkpointLocation", str(tmp_path / "ck"))
+         .outputMode("append").trigger(availableNow=True).start())
+    q.awaitTermination(120)
+
+    def key(r):
+        return (tuple(sorted(r["labels"].items())), r["ts"], r["value"])
+    got = {key(r) for r in spark.read.parquet(str(out)).collect()}
+    batch = {key(r) for r in build_preagg(
+        spark.createDataFrame(_raw_rows(), schema), RULES, RES).collect()}
+    # append mode withholds the windows the watermark has not closed
+    assert got and got <= batch and len(got) >= len(batch) - 2 * 4
+
+
+def test_planner_corpus_sample_compiles(spark):
+    from tests.planner_spec_corpus import INSTANT_ONLY, RANGE_QUERIES
+    from tests.test_planner_corpus import T0, corpus_engine
+    engine = corpus_engine(spark)
+    for q in RANGE_QUERIES[::10]:
+        engine.query_range(q, T0, T0 + 600_000, 120_000)
+    engine.query_instant(INSTANT_ONLY[0], T0 + 300_000)
+
+
+def test_property_kernels_rate(spark):
+    from tests.test_property_kernels import (WINDOW, check,
+                                             random_series_data, run_all)
+    from tests.test_range_fns import py_extrapolated_rate
+    df, _, clean_reset = random_series_data(spark)
+    check(run_all(spark, df, "rate"), clean_reset,
+          lambda t, w: py_extrapolated_rate(t - WINDOW, t, w, True, True),
+          "rate")

@@ -203,34 +203,70 @@ class TestMetadataHttpParams:
 
 
 class TestMetadataRequestPath:
-    """Metadata routes take the one request path of query/query_range:
-    the request's own `query-*` job group and scheduler pool, under its
-    `timeout=` deadline."""
+    """Every route that does Spark work takes the one request path of
+    query/query_range: the request's own `query-*` job group and
+    scheduler pool, under its `timeout=` deadline. Besides the metadata
+    routes that covers explainOnly planning (probes can launch jobs),
+    the `/__health` probe and remote read."""
 
     ROUTES = ["/api/v1/labels", "/api/v1/label/__name__/values",
               "/api/v1/series?match[]=purchase",
               "/api/v1/status/label_cardinality",
-              "/api/v1/status/ts_cardinality"]
+              "/api/v1/status/ts_cardinality",
+              "/api/v1/query_range?query=sum(rate(purchase[24h]))"
+              "&start=1704153600&end=1704585600&step=86400"
+              "&explainOnly=true",
+              "/__health"]
+
+    @staticmethod
+    def _spy_groups(spark, monkeypatch, *targets) -> list:
+        """Record the job group each call of owner.attr runs in."""
+        sc = spark.sparkContext
+        groups = []
+        for owner, attr in targets:
+            def spy(*args, _real=getattr(owner, attr), **kwargs):
+                groups.append(sc.getLocalProperty("spark.jobGroup.id"))
+                return _real(*args, **kwargs)
+            monkeypatch.setattr(owner, attr, spy)
+        return groups
 
     def test_runs_in_request_job_group(self, spark, server, monkeypatch):
+        from filodb_spark import api, http_server
         from filodb_spark import metadata as md
-        sc = spark.sparkContext
-        groups, real = [], md._series_rows
-
-        def spy(*args, **kwargs):
-            groups.append(sc.getLocalProperty("spark.jobGroup.id"))
-            return real(*args, **kwargs)
-        monkeypatch.setattr(md, "_series_rows", spy)
+        groups = self._spy_groups(spark, monkeypatch,
+                                  (md, "_series_rows"),
+                                  (api, "explain_range_api"),
+                                  (http_server, "_health"))
         for route in self.ROUTES:
             for extra in ("", "timeout=120s"):
                 sep = "&" if "?" in route else "?"
                 url = f"{server}{route}{sep}{extra}" if extra \
                     else f"{server}{route}"
                 with urllib.request.urlopen(url, timeout=120) as r:
-                    assert json.loads(r.read())["status"] == "success"
+                    assert json.loads(r.read())["status"] in (
+                        "success", "healthy")
         assert len(groups) == 2 * len(self.ROUTES)
         assert all(g and g.startswith("query-") for g in groups), groups
         assert len(set(groups)) == len(groups)     # one group per request
+
+    def test_remote_read_runs_in_request_job_group(self, spark, server,
+                                                   monkeypatch):
+        from filodb_spark import remote_read as rr
+        groups = self._spy_groups(spark, monkeypatch,
+                                  (rr, "run_read_request"))
+        body = rr.snappy_compress(rr.encode_read_request([{
+            "start_ms": 1704067200000, "end_ms": 1706486400000,
+            "matchers": [("=", "__name__", "error")]}]))
+        for query in ("", "?timeout=120s"):
+            req = urllib.request.Request(
+                f"{server}/api/v1/read{query}", data=body, method="POST")
+            with urllib.request.urlopen(req, timeout=120) as r:
+                [series] = rr.decode_read_response(
+                    rr.snappy_decompress(r.read()))
+            assert series
+        assert len(groups) == 2
+        assert all(g and g.startswith("query-") for g in groups), groups
+        assert len(set(groups)) == 2
 
     def test_timeout_cancels_metadata_job(self, spark, server, monkeypatch):
         import time

@@ -24,8 +24,8 @@ pytestmark = pytest.mark.slow
 T0 = 1_700_000_000_000
 
 
-@pytest.fixture(scope="module")
-def engine(spark):
+def corpus_engine(spark):
+    """An engine over the planner specs' fixture label shape."""
     rows = []
     names = ["foo", "bar", "test", "test1", "test2", "test3", "baz",
              "foo:1m", "bar:1m", "http_requests_total", "node_info",
@@ -38,6 +38,11 @@ def engine(spark):
     df = spark.createDataFrame(
         rows, "labels map<string,string>, ts long, value double")
     return PromQLEngine(spark, TsStore(df))
+
+
+@pytest.fixture(scope="module")
+def engine(spark):
+    return corpus_engine(spark)
 
 
 class TestPlannerCorpus:

@@ -43,8 +43,9 @@ def gen_series(rng: random.Random):
     return out
 
 
-@pytest.fixture(scope="module")
-def random_series(spark):
+def random_series_data(spark):
+    """(frame, clean model, counter-reset model) of the N_SERIES random
+    series."""
     rng = random.Random(SEED)
     data = {f"s{i}": gen_series(rng) for i in range(N_SERIES)}
     rows = [(k, int(t), float(v)) for k, ss in data.items() for t, v in ss]
@@ -72,6 +73,11 @@ def random_series(spark):
     from pyspark.sql import functions as F
     df = df.groupBy("series", "ts").agg(F.max("value").alias("value"))
     return df, clean, clean_reset
+
+
+@pytest.fixture(scope="module")
+def random_series(spark):
+    return random_series_data(spark)
 
 
 def windows(clean):

@@ -93,3 +93,56 @@ class TestMissingLabelMatchers:
         assert self._vals(ml_engine, 'm{host=~".*"}') == [1.0, 2.0]
         assert self._vals(ml_engine, 'm{host=~".+"}') == [1.0]
         assert self._vals(ml_engine, 'm{host!~".+"}') == [2.0]
+
+
+class TestDsGaugeTypeLabel:
+    """On a raw/downsample split the ds-GAUGE side scopes `_type_` the
+    way the raw side and the metadata scan do. Fixture as in
+    test_long_time_range_planner: g = i at DS_T0 + i min, raw retention
+    from DS_T0 + 10m, 5m ds-gauge rollups of all history."""
+
+    DS_T0 = 1_704_067_200_000
+    MIN = 60_000
+
+    @pytest.fixture(scope="class")
+    def split_store(self, spark):
+        from pyspark.sql import functions as F
+
+        from filodb_spark.kernels.binary import canonical_labels
+        from filodb_spark.streaming.downsample import downsample
+        full = spark.createDataFrame(
+            [({"__name__": "g", "job": "a"}, self.DS_T0 + i * self.MIN,
+              float(i)) for i in range(20)],
+            "labels map<string,string>, ts long, value double")
+        boundary = self.DS_T0 + 10 * self.MIN
+        ds = downsample(full.withColumn(
+            "_sk", canonical_labels(F.col("labels"))),
+            ["labels"], 5 * self.MIN).drop("_sk")
+        return TsStore(full.where(F.col("ts") >= boundary), ds_df=ds,
+                       raw_retention_start_ms=boundary)
+
+    def _points(self, spark, store, q):
+        out = PromQLEngine(spark, store).query_range(
+            q, self.DS_T0, self.DS_T0 + 19 * self.MIN, self.MIN)
+        return sorted((r["t"], r["value"]) for r in out.collect())
+
+    def test_schema_mismatch_empty_on_ds_side(self, spark, split_store):
+        # every step 0-15 is answered from the ds-gauge table
+        assert self._points(
+            spark, split_store,
+            'sum_over_time(g{_type_="prom-histogram"}[5m])') == []
+
+    def test_matching_schema_keeps_every_step(self, spark, split_store):
+        plain = self._points(spark, split_store, "sum_over_time(g[5m])")
+        assert len(plain) == 20
+        assert self._points(
+            spark, split_store,
+            'sum_over_time(g{_type_="gauge"}[5m])') == plain
+
+    def test_metadata_series_agrees(self, split_store):
+        from filodb_spark import metadata as md
+        lo, hi = self.DS_T0, self.DS_T0 + 19 * self.MIN
+        assert md.series(split_store, 'g{_type_="prom-histogram"}',
+                         lo, hi).collect() == []
+        [row] = md.series(split_store, 'g{_type_="gauge"}', lo, hi).collect()
+        assert row["labels"]["_type_"] == "gauge"
